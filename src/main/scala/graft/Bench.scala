@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registered query at the SF dir in
   * `SPARK_GRAFT_SF_DIR`, one JSON line on stdout. A failing query is
   * REPORTED (name → error in `"errors"`, and the process exits nonzero)
   * instead of being silently recorded as a fast success. */
 object Bench {
+  /** The scale-factor directory timed: `SPARK_GRAFT_SF_DIR`, else sf0.1. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     def esc(s: String): String = // strip ALL JSON-illegal chars
       s.replaceAll("[\\\\\"\\p{Cntrl}]", " ").take(300)
     // Untimed warmup: run every query once at the smallest SF so the

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
   * registry (round-11 verdict ask #8: 300+ queries across 60+ wave
   * files make discovery hard for a USER; the registry is the machine
   * surface, this is the human one). One row per registered query:
-  * name, the `file:line` where it is registered (found by scanning the
-  * main source tree for the quoted name), oracle coverage, and the doc
+  * name, the file where it is registered (found by scanning the main
+  * source tree for the quoted name), oracle coverage, and the doc
   * line. `RegistryManifestSpec` asserts the committed file matches
   * [[render]], so the index can never go stale.
   *
@@ -18,26 +18,19 @@ object QueriesIndex {
 
   private val SrcRoot = "src/main/scala/graft"
 
-  /** (file, 1-based line) of each registration site: the unique main-
-    * source line containing the QUOTED query name. */
-  private def sites(): Map[String, Seq[(String, Int)]] = {
+  /** The main-source files that register each query: every file with
+    * a line containing the QUOTED query name, each listed once. No line
+    * numbers, so edits that move a registration keep the index current. */
+  private def sites(): Map[String, Seq[String]] = {
     val root = Paths.get(SrcRoot)
     val files: Seq[Path] = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
       .toSeq.sortBy(_.toString)
-    val names = Registry.all.map(_._1).toSet
-    val found = scala.collection.mutable.Map.empty[String, Vector[(String, Int)]]
-    files.foreach { p =>
-      val lines = Files.readAllLines(p).asScala
-      lines.zipWithIndex.foreach { case (line, i) =>
-        names.foreach { n =>
-          if (line.contains("\"" + n + "\""))
-            found.updateWith(n)(v =>
-              Some(v.getOrElse(Vector.empty) :+ ((p.toString, i + 1))))
-        }
-      }
-    }
-    found.toMap
+    val names = Registry.all.map(_._1)
+    val found = files.map(p => p.toString -> Files.readString(p))
+    names.map { n =>
+      n -> found.collect { case (f, text) if text.contains("\"" + n + "\"") => f }
+    }.toMap
   }
 
   def render(): String = {
@@ -57,8 +50,7 @@ object QueriesIndex {
       "^q(\\d+)_".r.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(0)
     }
     byId.foreach { case (name, qd) =>
-      val site = at.getOrElse(name, Seq.empty)
-        .map { case (f, l) => s"`$f:$l`" }.mkString("<br>")
+      val site = at.getOrElse(name, Seq.empty).map(f => s"`$f`").mkString("<br>")
       val oracle = if (qd.oracle.isDefined) "sql" else "rows-only"
       val doc = qd.doc.replace("|", "\\|").replace("\n", " ")
       sb.append(s"| `$name` | $site | $oracle | $doc |\n")

@@ -141,10 +141,7 @@ object Soak {
     // the q27 pipeline shape, ProcessingTime instead of AvailableNow;
     // state partitions sized to the keyspace (see startFiles scaladoc)
     def startQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val spKey = "spark.sql.shuffle.partitions"
-      val spSaved = spark.conf.get(spKey)
-      spark.conf.set(spKey, "8")
-      try {
+      GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
         val raw = spark.readStream
           .schema(StructType(Seq(StructField("value", StringType))))
           .option("maxFilesPerTrigger", 64)
@@ -158,7 +155,7 @@ object Soak {
           .trigger(Trigger.ProcessingTime(trigger))
           .queryName("soak")
           .start()
-      } finally spark.conf.set(spKey, spSaved)
+      }
     }
     // restart-from-checkpoint on a dead query; returns true if it recovered
     def recoverIfDead(): Boolean = {
@@ -299,16 +296,9 @@ object Soak {
     val keys = args.lift(2).map(_.toInt).getOrElse(10000)
     val reportPath = args.lift(3).getOrElse("SOAK.json")
     val crashAfterBatches = args.lift(4).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // checkpoint-file checksums are pure overhead on a local-disk soak
+    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     val report = run(spark, durationSec, ratePerSec, keys,
       crashAfterBatches = crashAfterBatches)
     Files.writeString(Paths.get(reportPath), report + "\n")

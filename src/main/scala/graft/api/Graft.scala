@@ -98,65 +98,88 @@ final class Graft(val spark: SparkSession, stateDir: String) {
   }
 
   /** Merged view: base + deltas, newest version wins per path. */
-  def stateTable: Dataset[FileState] = {
-    val vs = versions()
-    require(vs.nonEmpty, s"no state versions under $stateDir")
-    val merged = vs.map { v =>
-        backfillDefaults(spark.read.parquet(s"$stateDir/files_v$v"))
-          .withColumn("__v", lit(v))
-      }
-      .reduce(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("path")).orderBy(col("__v").desc)
-    merged
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__v", "__rn")
-      .as[FileState]
-  }
+  def stateTable: Dataset[FileState] = files.table.as[FileState]
 
   /** Fold all versions into a single new base and prune the old ones. */
-  def compact(): Unit = {
-    val vs = versions()
-    val snapshot = stateTable.toDF().transform(graft.util.Pin.apply)
-    writeVersion(snapshot, allVersionDirs().maxOption.getOrElse(-1L) + 1)
-    vs.foreach(v => fs.delete(hpath(s"files_v$v"), true))
-  }
+  def compact(): Unit = files.compact()
 
   /** Committed state versions, ascending (dirs with a `_SUCCESS`
     * marker; an uncommitted/crashed write is invisible). */
-  def versions(): Seq[Long] = committedVersions("files")
+  def versions(): Seq[Long] = files.versions()
 
-  private def committedVersions(prefix: String): Seq[Long] = {
-    val re = (java.util.regex.Pattern.quote(prefix) + """_v(\d+)""").r
-    val dir = hpath("")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case re(v) if fs.exists(
-        hpath(s"${prefix}_v$v/_SUCCESS")) => v.toLong }
-      .sorted
-  }
+  private def persist(st: Dataset[FileState]): Unit = files.write(st.toDF())
 
   private def fs = org.apache.hadoop.fs.FileSystem.get(
     java.net.URI.create(stateDir), spark.sparkContext.hadoopConfiguration)
   private def hpath(rel: String) =
     new org.apache.hadoop.fs.Path(if (rel.isEmpty) stateDir else s"$stateDir/$rel")
 
-  /** Every version dir on disk, committed or not — the next write must
-    * never reuse a crashed writer's dir. */
-  private def allVersionDirs(prefix: String = "files"): Seq[Long] = {
-    val re = (java.util.regex.Pattern.quote(prefix) + """_v(\d+)""").r
-    val dir = hpath("")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case re(v) => v.toLong }
+  /** One versioned table under `stateDir` (the state table and the
+    * replica registry share the protocol above): `<prefix>_v<N>` dirs,
+    * committed by their `_SUCCESS` marker, each read through `read` and
+    * merged with the newest version winning per path. */
+  private final class Versioned(prefix: String, read: DataFrame => DataFrame,
+      missing: String) {
+    private val re = (java.util.regex.Pattern.quote(prefix) + """_v(\d+)""").r
+    private def dir(v: Long) = s"${prefix}_v$v"
+
+    /** Every version dir on disk, committed or not — the next write must
+      * never reuse a crashed writer's dir. */
+    def allDirs(): Seq[Long] =
+      if (!fs.exists(hpath(""))) Seq.empty
+      else fs.listStatus(hpath("")).toSeq.map(_.getPath.getName)
+        .collect { case re(v) => v.toLong }
+
+    def versions(): Seq[Long] =
+      allDirs().filter(v => fs.exists(hpath(s"${dir(v)}/_SUCCESS"))).sorted
+
+    def write(df: DataFrame,
+        v: Long = allDirs().maxOption.getOrElse(-1L) + 1): Unit =
+      df.write.mode("errorifexists").parquet(s"$stateDir/${dir(v)}")
+
+    def delete(vs: Seq[Long]): Unit = vs.foreach(v => fs.delete(hpath(dir(v)), true))
+
+    def table: DataFrame = {
+      val vs = versions()
+      require(vs.nonEmpty, missing)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("path")).orderBy(col("__v").desc)
+      vs.map(v => read(spark.read.parquet(s"$stateDir/${dir(v)}"))
+          .withColumn("__v", lit(v)))
+        .reduce(_ unionByName _)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__v", "__rn")
+    }
+
+    def compact(): Unit = {
+      val vs = versions()
+      write(graft.util.Pin(table))
+      delete(vs)
+    }
+
+    // Memoized merged view keyed by the committed-version list: lookups
+    // filter a PINNED materialization instead of re-reading and
+    // re-windowing every version per call; any new committed version
+    // (delta write, compaction) invalidates by key.
+    @volatile private var cache: Option[(Seq[Long], DataFrame)] = None
+
+    def cached(): DataFrame = synchronized {
+      val vs = versions()
+      cache match {
+        case Some((`vs`, df)) => df
+        case _ =>
+          val pinned = graft.util.Pin(table)
+          cache = Some((vs, pinned))
+          pinned
+      }
+    }
   }
 
-  private def persist(st: Dataset[FileState]): Unit =
-    writeVersion(st.toDF(), allVersionDirs().maxOption.getOrElse(-1L) + 1)
-
-  private def writeVersion(df: DataFrame, v: Long, prefix: String = "files"): Unit =
-    df.write.mode("errorifexists").parquet(s"$stateDir/${prefix}_v$v")
+  private val files = new Versioned("files", backfillDefaults,
+    s"no state versions under $stateDir")
+  private val replicas = new Versioned("replicas", identity,
+    s"no replica registry under $stateDir — POST /admin/snapshot/start first")
 
   // ── snapshot (HDFSSnapshotProcessor parity) ──────────────────────────
   /** Emit synthetic Snapshot-mode CloseFile events for every live file
@@ -214,35 +237,6 @@ final class Graft(val spark: SparkSession, stateDir: String) {
 
   @volatile private var snapshotService: Boolean = false
 
-  // Memoized merged views keyed by the committed-version list: the
-  // callback path filters a PINNED materialization instead of
-  // re-reading and re-windowing every version per call; any new
-  // committed version (delta write, compaction) invalidates by key.
-  @volatile private var stateCache: Option[(Seq[Long], DataFrame)] = None
-  @volatile private var replicaCache: Option[(Seq[Long], DataFrame)] = None
-
-  private def cachedStateTable(): DataFrame = synchronized {
-    val vs = committedVersions("files")
-    stateCache match {
-      case Some((`vs`, df)) => df
-      case _ =>
-        val pinned = graft.util.Pin(stateTable.toDF())
-        stateCache = Some((vs, pinned))
-        pinned
-    }
-  }
-
-  private def cachedReplicaTable(): DataFrame = synchronized {
-    val vs = committedVersions("replicas")
-    replicaCache match {
-      case Some((`vs`, df)) => df
-      case _ =>
-        val pinned = graft.util.Pin(replicaTable.toDF())
-        replicaCache = Some((vs, pinned))
-        pinned
-    }
-  }
-
   /** Whether /admin/snapshot/start has run in this facade's lifetime. */
   def snapshotStarted: Boolean = snapshotService
 
@@ -255,9 +249,8 @@ final class Graft(val spark: SparkSession, stateDir: String) {
     val reg = ReplicaTracker.fromSnapshot(stateTable, Graft.inodeOf).toDF()
       // sever lineage before the old registry dirs are deleted below
       .transform(graft.util.Pin.apply)
-    allVersionDirs("replicas").foreach(v =>
-      fs.delete(hpath(s"replicas_v$v"), true))
-    writeVersion(reg, 0L, "replicas")
+    replicas.delete(replicas.allDirs())
+    replicas.write(reg, 0L)
     snapshotService = true
     reg.count()
   }
@@ -269,20 +262,7 @@ final class Graft(val spark: SparkSession, stateDir: String) {
 
   /** Merged replica registry (base + one-row callback deltas, newest
     * version wins per path). */
-  def replicaTable: Dataset[ReplicaState] = {
-    val vs = committedVersions("replicas")
-    require(vs.nonEmpty, s"no replica registry under $stateDir — " +
-      "POST /admin/snapshot/start first")
-    val merged = vs.map(v => spark.read.parquet(s"$stateDir/replicas_v$v")
-        .withColumn("__v", lit(v)))
-      .reduce(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("path")).orderBy(col("__v").desc)
-    merged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__v", "__rn")
-      .as[ReplicaState]
-  }
+  def replicaTable: Dataset[ReplicaState] = replicas.table.as[ReplicaState]
 
   /** The snapshot-done callback (`HDFSSnapshotProcessor.java:234-286`):
     * validates the file + replica records and the snapshot tx, flips
@@ -298,10 +278,10 @@ final class Graft(val spark: SparkSession, stateDir: String) {
         "snapshot service not started (POST /admin/snapshot/start)")
       // bounded lookups: one file-state row + one replica row (take(1))
       // against the memoized pinned views
-      val fileSt = cachedStateTable().filter(col("path") === path)
+      val fileSt = files.cached().filter(col("path") === path)
         .as[FileState].take(1).headOption.getOrElse(
           throw new Graft.NotFound(s"HDFS file state not found. [path=$path]"))
-      val replica = cachedReplicaTable().filter(col("path") === path)
+      val replica = replicas.cached().filter(col("path") === path)
         .as[ReplicaState].take(1).headOption.getOrElse(
           throw new Graft.NotFound(
             s"HDFS file replication record not found. [path=$path]"))
@@ -321,19 +301,11 @@ final class Graft(val spark: SparkSession, stateDir: String) {
         lastReplicatedTx = math.max(replica.lastReplicatedTx,
           if (backlog) fileSt.lastTxId else txId),
         snapshotReady = true)
-      writeVersion(Seq(updated).toDS().toDF(),
-        allVersionDirs("replicas").max + 1, "replicas")
-      if (committedVersions("replicas").size > Graft.AutoCompactAfter)
-        compactReplicas()
+      replicas.write(Seq(updated).toDS().toDF())
+      if (replicas.versions().size > Graft.AutoCompactAfter)
+        replicas.compact()
       Graft.SnapshotDone(updated, backlogEmitted = backlog, duplicate = false)
     }
-
-  private def compactReplicas(): Unit = {
-    val vs = committedVersions("replicas")
-    val snap = replicaTable.toDF().transform(graft.util.Pin.apply)
-    writeVersion(snap, allVersionDirs("replicas").max + 1, "replicas")
-    vs.foreach(v => fs.delete(hpath(s"replicas_v$v"), true))
-  }
 
   /** Backlog CloseFile events appended by [[snapshotDone]] callbacks —
     * the queue the delta-replication stage drains. */

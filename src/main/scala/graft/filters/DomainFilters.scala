@@ -44,17 +44,19 @@ object DomainFilters {
     * (`_none`/`IgnoreTx` when unmatched); rows matching the global
     * ignore regex are suppressed entirely. */
   def route(events: DataFrame, filters: Seq[Filter]): DataFrame = {
-    val sorted = filters.sortBy(_.priority)
-    val domainExpr = sorted.foldRight(lit("_none")) { (f, els) =>
-      when(matches(f), lit(f.domain)).otherwise(els)
-    }
-    val entityExpr = sorted.foldRight(lit("IgnoreTx")) { (f, els) =>
-      when(matches(f), lit(f.entity)).otherwise(els)
-    }
+    def target(domain: String, entity: String): Column =
+      struct(lit(domain).as("domain"), lit(entity).as("entity"))
+    // one chain yields both columns: each filter's regex runs once per row
+    val routed = filters.sortBy(_.priority)
+      .foldRight(target("_none", "IgnoreTx")) { (f, els) =>
+        when(matches(f), target(f.domain, f.entity)).otherwise(els)
+      }
     events
       .filter(!col("path").rlike(IgnoreRegex))
-      .withColumn("domain", domainExpr)
-      .withColumn("entity", entityExpr)
+      .withColumn("__route", routed)
+      .withColumn("domain", col("__route.domain"))
+      .withColumn("entity", col("__route.entity"))
+      .drop("__route")
   }
 
   /** Dynamic-registry variant: filters arrive as a DataFrame

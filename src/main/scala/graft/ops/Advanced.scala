@@ -431,10 +431,7 @@ object Advanced {
     * the keys the production table would already be bucketed by. */
   private def qStreamIvm(s: SparkSession, dir: String): DataFrame = {
     implicit val spark: SparkSession = s
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    s.conf.set(spKey, "8")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val result = graft.streaming.StreamScratch.withScratch("graft_sivm_") { tmp =>
         val li = load(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
@@ -474,7 +471,7 @@ object Advanced {
         .select(col("o_custkey"), col("rev").cast(DoubleType).as("revenue"),
           col("n").as("n_items"))
         .orderBy(col("o_custkey"))
-    } finally s.conf.set(spKey, spSaved)
+    }
   }
 
   // ------------------------------------------------------------- q153

@@ -334,18 +334,11 @@ object Cdc {
     // single-node replay against local disk they are pure overhead, so
     // the lifecycle query turns them off. Cluster deployments keep the
     // Spark default.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val ckSaved = spark.conf.getOption(ckKey)
-    spark.conf.set(ckKey, "false")
-    val q = try {
+    val q = graft.GraftSession.withConf(spark,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
       graft.streaming.ChangeStreamPipeline
         .startFiles(s"$tmp/in", s"$tmp/out", s"$tmp/chk",
           statePartitions = Some(8)) // ~100k events / 150 keys at gate scale
-    } finally {
-      ckSaved match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None => spark.conf.unset(ckKey)
-      }
     }
     q.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window

@@ -89,87 +89,88 @@ object Components {
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
       nDirected * 2 / 1000000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      if (preferStar) return starLabels(both, pinFn = pinFn)
-      var labels = both.select(col("eSrc").as("id")).distinct()
-        .select(col("id"), col("id").as("component"))
-        .transform(pinFn[org.apache.spark.sql.Row] _)
-      // The pin BACKING the current labels view: released as soon as
-      // its successor generation is materialized (q270's sf10 lesson —
-      // dead pinned generations otherwise accumulate across rounds
-      // until the GC-driven cleaner happens to run).
-      var backing: org.apache.spark.sql.Dataset[_] = labels
-      var round = 0
-      var converged = false
-      var prevChanges = Long.MaxValue
-      while (!converged && round < maxRounds) {
-        val incoming = both.join(labels, col("eSrc") === col("id"))
-          .groupBy(col("eDst")).agg(min(col("component")).as("viaEdge"))
-        // neighbor propagation: m = min(own label, labels seen on edges).
-        // Pinned BEFORE any jump so the self-join below consumes a
-        // materialized leaf, never re-evaluates the join+aggregate
-        // subtree (the re-evaluation pathology the starLabels comment
-        // documents as measured-worse).
-        val prop = labels.withColumnRenamed("component", "prev")
-          .join(incoming, col("id") === col("eDst"), "left")
-          .select(col("id"), col("prev"),
-            least(col("prev"), coalesce(col("viaEdge"), col("prev")))
-              .as("m"))
+    graft.GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      if (preferStar) starLabels(both, pinFn = pinFn)
+      else {
+        var labels = both.select(col("eSrc").as("id")).distinct()
+          .select(col("id"), col("id").as("component"))
           .transform(pinFn[org.apache.spark.sql.Row] _)
-        // prop is eagerly materialized — the previous generation's pin
-        // is dead weight from here on
-        graft.util.Pin.release(backing)
-        val changes = prop.filter(col("m") < col("prev")).count()
-        converged = changes == 0
-        // changes == 0 means no node can lower its label from a
-        // neighbor — the propagation fixpoint, which is exactly
-        // "every node carries its component minimum" (labels only
-        // decrease, start at own id, and the min node keeps its own).
-        if (converged) {
-          labels = prop.select(col("id"), col("m").as("component"))
-          backing = prop
-        } else {
-          // ADAPTIVE pointer jumping: follow the label one hop —
-          // L(v) ← L(L(v)). Every label value is itself a node id (labels
-          // are min-folds of node ids) so the self-join always hits, and
-          // shortcutting collapses label chains as they form — on the
-          // round-10 q291 name graph the loop burned the whole 30-round
-          // budget without it. But the jump self-join costs a full extra
-          // shuffle+pin per round, pure overhead on dense near-dup graphs
-          // that converge in 2–3 rounds (q52 regressed 1.6× when it ran
-          // unconditionally). Engage it only when the change frontier is
-          // NOT collapsing: chains decay by ~1 node/round (changes stays
-          // near the previous round's), dense clusters fall off a cliff.
-          val jump = round >= 1 && changes * 2 > prevChanges
-          if (!jump) {
+        // The pin BACKING the current labels view: released as soon as
+        // its successor generation is materialized (q270's sf10 lesson —
+        // dead pinned generations otherwise accumulate across rounds
+        // until the GC-driven cleaner happens to run).
+        var backing: org.apache.spark.sql.Dataset[_] = labels
+        var round = 0
+        var converged = false
+        var prevChanges = Long.MaxValue
+        while (!converged && round < maxRounds) {
+          val incoming = both.join(labels, col("eSrc") === col("id"))
+            .groupBy(col("eDst")).agg(min(col("component")).as("viaEdge"))
+          // neighbor propagation: m = min(own label, labels seen on edges).
+          // Pinned BEFORE any jump so the self-join below consumes a
+          // materialized leaf, never re-evaluates the join+aggregate
+          // subtree (the re-evaluation pathology the starLabels comment
+          // documents as measured-worse).
+          val prop = labels.withColumnRenamed("component", "prev")
+            .join(incoming, col("id") === col("eDst"), "left")
+            .select(col("id"), col("prev"),
+              least(col("prev"), coalesce(col("viaEdge"), col("prev")))
+                .as("m"))
+            .transform(pinFn[org.apache.spark.sql.Row] _)
+          // prop is eagerly materialized — the previous generation's pin
+          // is dead weight from here on
+          graft.util.Pin.release(backing)
+          val changes = prop.filter(col("m") < col("prev")).count()
+          converged = changes == 0
+          // changes == 0 means no node can lower its label from a
+          // neighbor — the propagation fixpoint, which is exactly
+          // "every node carries its component minimum" (labels only
+          // decrease, start at own id, and the min node keeps its own).
+          if (converged) {
             labels = prop.select(col("id"), col("m").as("component"))
             backing = prop
           } else {
-            labels = prop
-              .join(prop.select(col("id").as("jid"), col("m").as("jm")),
-                col("m") === col("jid"))
-              .select(col("id"), col("jm").as("component"))
-              .transform(pinFn[org.apache.spark.sql.Row] _)
-            // the jump result is materialized — prop is now superseded
-            graft.util.Pin.release(prop)
-            backing = labels
+            // ADAPTIVE pointer jumping: follow the label one hop —
+            // L(v) ← L(L(v)). Every label value is itself a node id (labels
+            // are min-folds of node ids) so the self-join always hits, and
+            // shortcutting collapses label chains as they form — on the
+            // round-10 q291 name graph the loop burned the whole 30-round
+            // budget without it. But the jump self-join costs a full extra
+            // shuffle+pin per round, pure overhead on dense near-dup graphs
+            // that converge in 2–3 rounds (q52 regressed 1.6× when it ran
+            // unconditionally). Engage it only when the change frontier is
+            // NOT collapsing: chains decay by ~1 node/round (changes stays
+            // near the previous round's), dense clusters fall off a cliff.
+            val jump = round >= 1 && changes * 2 > prevChanges
+            if (!jump) {
+              labels = prop.select(col("id"), col("m").as("component"))
+              backing = prop
+            } else {
+              labels = prop
+                .join(prop.select(col("id").as("jid"), col("m").as("jm")),
+                  col("m") === col("jid"))
+                .select(col("id"), col("jm").as("component"))
+                .transform(pinFn[org.apache.spark.sql.Row] _)
+              // the jump result is materialized — prop is now superseded
+              graft.util.Pin.release(prop)
+              backing = labels
+            }
           }
+          prevChanges = changes
+          round += 1
         }
-        prevChanges = changes
-        round += 1
+        if (converged) labels
+        else {
+          // long-chain topology: label propagation needs O(diameter)
+          // rounds; star contraction needs O(log² n) on anything. The
+          // label loop's final generation is dead once the star solver
+          // takes over.
+          graft.util.Pin.release(backing)
+          starLabels(both, pinFn = pinFn)
+        }
       }
-      if (converged) labels
-      else {
-        // long-chain topology: label propagation needs O(diameter)
-        // rounds; star contraction needs O(log² n) on anything. The
-        // label loop's final generation is dead once the star solver
-        // takes over.
-        graft.util.Pin.release(backing)
-        starLabels(both, pinFn = pinFn)
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** One LARGE-STAR round: every node links its strictly-larger

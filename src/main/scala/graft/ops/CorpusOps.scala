@@ -410,10 +410,7 @@ object CorpusOps {
     // bench session otherwise opens 32 RocksDB stores per micro-batch
     // for a per-user FSM whose state fits a few hundred partitions'
     // worth in one — store instantiation/commit is the cost.
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    s.conf.set(spKey, "8")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
     // transformWithState requires the RocksDB state store provider —
     // scoped to this gate (restored on exit, see StreamScratch)
     val sessions = graft.streaming.StreamScratch.withRocksDb(s) {
@@ -434,7 +431,7 @@ object CorpusOps {
       }
     }
     sessionsToDF(sessions)
-    } finally s.conf.set(spKey, spSaved)
+    }
   }
 
   // --------------------------------------------------------------- q110

@@ -234,14 +234,9 @@ object Materialize {
     // provider (required by transformWithState) is likewise scoped to
     // this query and RESTORED after — leaking it session-wide would
     // silently re-provider every later streaming query
-    val spKey = "spark.sql.shuffle.partitions"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val spSaved = s.conf.get(spKey)
-    val provSaved = s.conf.getOption(provKey)
-    s.conf.set(spKey, "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8",
+        graft.streaming.StreamScratch.ProviderKey ->
+          graft.streaming.StreamScratch.RocksDbProvider) {
     val result = graft.streaming.StreamScratch.withScratch("graft_smerge_") { tmp =>
       // up to four hash-partitioned input files = up to four
       // micro-batches in arbitrary slice order — fine HERE because
@@ -288,9 +283,6 @@ object Materialize {
       .select(col("user_id"), col("n_changes"), col("last_type"),
         col("last_value"), expr("timestamp_micros(last_us)").as("updated_at"))
       .orderBy(col("user_id"))
-    } finally {
-      s.conf.set(spKey, spSaved)
-      provSaved.fold(s.conf.unset(provKey))(v => s.conf.set(provKey, v))
     }
   }
 
@@ -549,10 +541,7 @@ object Materialize {
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import org.apache.spark.sql.types.{DoubleType, StructType}
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    s.conf.set(spKey, "8")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
     val schema = new StructType()
       .add("l_partkey", LongType).add("l_extendedprice", DoubleType)
       .add("l_discount", DoubleType)
@@ -605,7 +594,7 @@ object Materialize {
       persisted
     }
     result.orderBy(col("p_brand"))
-    } finally s.conf.set(spKey, spSaved)
+    }
   }
 
   private val qStreamStaticJoinSql =

@@ -263,18 +263,18 @@ object Relational2 {
     * driven by the CATALOG (round-13 verdict ask #5): the q295-shaped
     * stats export's MCV tier decides which keys salt —
     * [[graft.ops.StatsPlanner.skewedJoinFromStats]], the q317 device —
-    * instead of the previous runtime frequency pass
-    * (`Salting.hotSaltedJoin`), which re-aggregated the WHOLE probe
-    * side and broadcast-joined the hot set into both inputs at plan
-    * time. The catalog form makes the hot decision from K MCV rows
-    * (a codegen'd `IN`, zero broadcast machinery on the cold path) and
-    * is the measured winner of the round-13 `SkewProbe` ladder (sf10:
-    * 10.38 s vs 15.10 s for the runtime-frequency form). Gated against
+    * instead of the previous runtime frequency pass, which
+    * re-aggregated the WHOLE probe side and broadcast-joined the hot
+    * set into both inputs at plan time. The catalog form makes the hot
+    * decision from K MCV rows (a codegen'd `IN`, zero broadcast
+    * machinery on the cold path) and is the measured winner of the
+    * round-13 skew ladder in BASELINE.md (sf10: 10.38 s vs 15.10 s for
+    * the runtime-frequency form). Gated against
     * the UNSALTED join's aggregate: salting must be invisible in the
     * result.
     *
-    * Round-7 measurement (`graft.SkewProbe`, 30% of probe rows on one
-    * hot key): BLANKET build-side salting — this query's original form
+    * Round-7 measurement (BASELINE.md, 30% of probe rows on one hot
+    * key): BLANKET build-side salting — this query's original form
     * — ran 24.1 s at the 100× directory vs 10.1 s for AQE's runtime
     * skew split and 22.4 s untreated: whole-side replication loses
     * even to doing nothing. Hence the adopted order at 100 TB: let AQE

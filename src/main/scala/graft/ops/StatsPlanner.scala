@@ -199,9 +199,10 @@ object StatsPlanner {
     * the matching build rows replicate; every cold key joins
     * untouched on salt 0. This is the manual treatment for stages AQE
     * cannot re-plan (pre-partitioned stateful stages, fixed
-    * mid-pipeline exchanges — see the round-7 SkewProbe measurement
-    * in [[graft.util.Salting]]), now driven by PERSISTED stats
-    * instead of a runtime frequency pass: zero plan-time scans, and
+    * mid-pipeline exchanges — see the round-7 skew measurement in
+    * BASELINE.md and q125's doc in `Relational2`), now driven by
+    * PERSISTED stats instead of a runtime frequency pass: zero
+    * plan-time scans, and
     * the hot-key decision itself is oracle-checkable (q317). Returns
     * (joined, hot keys); empty hot set degrades to a plain equi-join. */
   def skewedJoinFromStats(probe: DataFrame, probeKey: String,

@@ -66,8 +66,8 @@ object Wave33 {
       .orderBy(col("jacc_ppm").desc, col("a"), col("b"))
   }
 
-  /** The q259 pipeline's stage frames, exposed for the candidate-cut
-    * probe ([[graft.SetSimProbe]]) and the suffix-bound spec:
+  /** The q259 pipeline's stage frames, exposed for the suffix-bound
+    * spec (the candidate-cut ladder is recorded in BASELINE.md):
     * `cands` = survivors of prefix+length+positional filtering,
     * `verifyIn` = survivors of the histogram suffix bound,
     * `pairs` = exact-verified result pairs. */

@@ -326,10 +326,7 @@ object Wave39 {
     // RocksDB stores per micro-batch — instantiation, snapshot and
     // commit per store are the cost, not the 5 keys of state (the
     // q129 lesson applied here).
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    s.conf.set(spKey, "8")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
     val result = graft.streaming.StreamScratch.withRocksDb(s) {
       graft.streaming.StreamScratch.withScratch("graft_sprof_") {
       tmp =>
@@ -388,7 +385,7 @@ object Wave39 {
       .select(col("col_name"), col("n_rows"), col("n_null"),
         col("ndv_est"), col("min_s"), col("max_s"))
       .orderBy(col("col_name"))
-    } finally s.conf.set(spKey, spSaved)
+    }
   }
 
   /** q263's oracle minus the exact-distinct branch (deliberately not

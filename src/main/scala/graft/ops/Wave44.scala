@@ -74,10 +74,7 @@ object Wave44 {
     // Pin state partitioning to 8 (the q129 lesson): a 32-thread bench
     // session otherwise opens 32 RocksDB stores per micro-batch for a
     // CMS whose whole state is CmsD x CmsW counter cells.
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    s.conf.set(spKey, "8")
-    try {
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
     val result = graft.streaming.StreamScratch.withRocksDb(s) {
       graft.streaming.StreamScratch.withScratch("graft_scms_") {
       tmp =>
@@ -128,7 +125,7 @@ object Wave44 {
         expr("CAST(split(cell, ':')[1] AS BIGINT)").as("b"),
         col("cnt"))
       .orderBy(col("row_i"), col("b"))
-    } finally s.conf.set(spKey, spSaved)
+    }
   }
 
   /** The batch-built counter matrix (q285's counter CTEs, unioned with

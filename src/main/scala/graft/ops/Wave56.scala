@@ -70,10 +70,9 @@ object Wave56 {
     // q27's lifecycle tuning: checkpoint-file checksums are pure
     // overhead on a local-disk replay (cluster deployments keep the
     // Spark default)
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val ckSaved = s.conf.getOption(ckKey)
-    s.conf.set(ckKey, "false")
-    val result = try graft.streaming.StreamScratch.withScratch("graft_scbo_") {
+    val result = graft.GraftSession.withConf(s,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
+      graft.streaming.StreamScratch.withScratch("graft_scbo_") {
       tmp =>
         statsA.write.mode("overwrite").parquet(s"$tmp/stats")
         val in = graft.streaming.SliceReplay.stage(tmp,
@@ -110,10 +109,6 @@ object Wave56 {
           .start()
         q.awaitTermination()
         s.read.parquet(out)
-    } finally {
-      ckSaved match {
-        case Some(v) => s.conf.set(ckKey, v)
-        case None => s.conf.unset(ckKey)
       }
     }
     result.orderBy(col("batch_id"))

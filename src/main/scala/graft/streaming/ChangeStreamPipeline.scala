@@ -142,10 +142,8 @@ object ChangeStreamPipeline {
     // native-store setup into the measured path. StreamExecution clones the
     // session config at start(), so the temporary override cannot leak into
     // concurrent batch queries once restored.
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
+    graft.GraftSession.withConf(spark, statePartitions.toSeq
+        .map(n => "spark.sql.shuffle.partitions" -> n.toString): _*) {
       stateStream(decode(raw)).toDF()
         .writeStream
         .outputMode("update")
@@ -155,8 +153,6 @@ object ChangeStreamPipeline {
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())
         .start()
-    } finally {
-      if (statePartitions.isDefined) spark.conf.set(key, saved)
     }
   }
 
@@ -176,10 +172,8 @@ object ChangeStreamPipeline {
       implicit spark: SparkSession): StreamingQuery = {
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_type", StringType), StructField("ts", LongType)))
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
+    graft.GraftSession.withConf(spark, statePartitions.toSeq
+        .map(n => "spark.sql.shuffle.partitions" -> n.toString): _*) {
       spark.readStream
         .schema(StructType(Seq(StructField("value", StringType))))
         .text(inDir)
@@ -209,8 +203,6 @@ object ChangeStreamPipeline {
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())
         .start()
-    } finally {
-      if (statePartitions.isDefined) spark.conf.set(key, saved)
     }
   }
 

@@ -19,6 +19,9 @@ import org.apache.spark.sql.SparkSession
   * with both this root and [[GateOut]]'s on `mocks3://`. */
 object StreamScratch {
   val ScratchKey = "spark.graft.scratchDir"
+  val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def withScratch[T](prefix: String)(body: String => T)(
       implicit spark: SparkSession): T = {
@@ -44,17 +47,8 @@ object StreamScratch {
     * gate can never silently re-provider every later streaming query in
     * the same bench/verify session (the Materialize.scala contract,
     * factored out so every transformWithState gate uses it). */
-  def withRocksDb[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def withRocksDb[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(s, ProviderKey -> RocksDbProvider)(body)
 }
 
 /** Caller-owned RESULT area for the streaming gates. A gate's final
@@ -237,18 +231,8 @@ object SliceReplay {
   * `SparkSession.newSession()` per gate. */
 object StreamConfs {
   def withHdfsStateStore[T](s: SparkSession, partitions: String = "8")(
-      body: => T): T = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val spSaved = s.conf.get(spKey)
-    val provSaved = s.conf.getOption(provKey)
-    s.conf.set(spKey, partitions)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming.state." +
-      "HDFSBackedStateStoreProvider")
-    try body
-    finally {
-      s.conf.set(spKey, spSaved)
-      provSaved.fold(s.conf.unset(provKey))(v => s.conf.set(provKey, v))
-    }
-  }
+      body: => T): T =
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> partitions,
+      StreamScratch.ProviderKey -> ("org.apache.spark.sql.execution." +
+        "streaming.state.HDFSBackedStateStoreProvider"))(body)
 }

@@ -33,51 +33,4 @@ object Salting {
       .groupBy(groupKeys: _*)
       .agg(sum(col("_partial")).as(resultName), sum(col("_pn")).as("n_rows"))
   }
-
-  /** Keys whose row count exceeds `hotFactor` × the mean per-key count.
-    * The heavy-hitter set is bounded by construction — at most
-    * total/(hotFactor·mean) = #keys/hotFactor rows, and in real skew a
-    * handful — so it always broadcasts. */
-  def hotKeys(df: DataFrame, key: String, hotFactor: Int = 4): DataFrame = {
-    val counts = df.groupBy(col(key)).agg(count(lit(1)).as("_n"))
-    // bounded collect: one scalar (the mean per-key row count);
-    // avg() over an EMPTY probe is NULL — treat as "no hot keys"
-    // rather than NPE-crashing the caller's join on empty input
-    val meanN = Option(counts.agg(avg(col("_n"))).head()
-      .getAs[java.lang.Double](0)).fold(Double.MaxValue)(_.doubleValue)
-    counts.filter(col("_n") > meanN * hotFactor).select(col(key))
-  }
-
-  /** Hot-key-gated SALTED EQUI-JOIN — the manual join-skew treatment,
-    * replicating the build side ONLY under keys a frequency pass flags
-    * as hot; cold keys ride salt 0 with zero overhead.
-    *
-    * Why gated, measured (round-7 `graft.SkewProbe`, 30% of probe rows
-    * on one hot key): blanket ×8 salting took 24.1 s at the 100×
-    * directory vs 10.1 s for AQE's runtime skew split and 22.4 s for
-    * the UNTREATED join — replicating the whole build side costs more
-    * than the skew it cures, losing even to doing nothing. So at 100 TB
-    * the first-choice treatment is AQE (`skewJoin.enabled`, on by
-    * default, re-plans from real shuffle sizes); this manual form
-    * exists for the places AQE cannot re-plan — a pre-partitioned
-    * stateful stage, a fixed-layout mid-pipeline exchange — and then it
-    * must only pay for the keys that are actually hot. */
-  def hotSaltedJoin(probe: DataFrame, build: DataFrame,
-      probeKey: String, buildKey: String, spread: Column,
-      nSalts: Int = 8, hotFactor: Int = 4): DataFrame = {
-    val hot = hotKeys(probe, probeKey, hotFactor)
-      .withColumnRenamed(probeKey, "__hot")
-    val p = probe
-      .join(broadcast(hot), col(probeKey) === col("__hot"), "left")
-      .withColumn("__salt", when(col("__hot").isNotNull,
-        saltCol(spread, nSalts)).otherwise(lit(0)))
-      .drop("__hot")
-    val b = build
-      .join(broadcast(hot), col(buildKey) === col("__hot"), "left")
-      .withColumn("__salt", explode(when(col("__hot").isNotNull,
-        expr(s"sequence(0, ${nSalts - 1})")).otherwise(array(lit(0)))))
-      .drop("__hot")
-    p.join(b, p(probeKey) === b(buildKey) && p("__salt") === b("__salt"))
-      .drop("__salt")
-  }
 }

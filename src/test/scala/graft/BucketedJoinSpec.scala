@@ -39,18 +39,15 @@ class BucketedJoinSpec extends AnyFunSuite {
     // at gate SF both sides fit the broadcast threshold, which would
     // mask the property under test (a 100 TB fact-fact join cannot
     // broadcast either side) — disable it for the assertion
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (joined, plan) =
-      try {
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = spark.table("b_lineitem")
           .join(spark.table("b_orders"),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"))
         (j, j.queryExecution.executedPlan.toString)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        prevThreshold)
+      }
     // the join itself must read co-located buckets: no Exchange feeds it
     val joinSection = plan.split("HashAggregate").last
     assert(joinSection.contains("SortMergeJoin") ||
@@ -75,15 +72,13 @@ class BucketedJoinSpec extends AnyFunSuite {
         .mode("overwrite").saveAsTable("b_lineitem")
     // the planner's auto-bucketed-scan heuristic skips bucketing for a
     // bare filter (no join/agg to co-locate), so pin it on for the probe
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false")
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val one = spark.table("b_lineitem").filter(col("l_orderkey") === 7L)
       val scan = one.queryExecution.executedPlan.collectLeaves()
         .map(_.toString).mkString
       assert(scan.contains("SelectedBucketsCount: 1 out of 8"),
         s"bucket pruning did not engage:\n$scan")
-    } finally spark.conf
-      .unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    }
   }
 }

@@ -29,19 +29,15 @@ class CheckpointModeSpec extends AnyFunSuite {
     }.toMap
 
   test("reliable-checkpoint mode returns identical rows to local mode") {
-    val key = graft.util.Pin.FlagKey
-    val saved = spark.conf.getOption(key)
     val baseline = runAll()
-    try {
-      spark.conf.set(key, "true")
+    GraftSession.withConf(spark, graft.util.Pin.FlagKey -> "true") {
       val reliable = runAll()
       for (q <- checkpointHeavy)
         assert(reliable(q) == baseline(q), s"$q diverged across modes")
       // the flag really engaged: a reliable checkpoint dir was set
       assert(spark.sparkContext.getCheckpointDir.nonEmpty,
         "reliable mode never set a checkpoint dir — flag not read?")
-    } finally
-      saved.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("DISK_ONLY spill pin: identical rows, blocks on disk, reclaimed") {

@@ -48,13 +48,9 @@ class PartitionPruneSpec extends AnyFunSuite {
     // the benefit heuristic estimates pruned bytes from stats — on a
     // KB-sized test fixture it always says "not worth it", so pin the
     // ratio fallback the way Spark's own DPP suite does (scoped)
-    val useStats = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
-    val ratio =
-      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio"
-    val (s0, r0) = (spark.conf.get(useStats), spark.conf.get(ratio))
-    try {
-      spark.conf.set(useStats, "false")
-      spark.conf.set(ratio, "10.0")
+    GraftSession.withConf(spark,
+        "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0") {
       // the dim must be file-backed: a filtered in-memory LocalRelation
       // is constant-folded away, leaving no selective predicate for the
       // pruning rule to find
@@ -70,8 +66,6 @@ class PartitionPruneSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.toLowerCase.contains("dynamicpruning"),
         s"DPP subquery missing from fact scan:\n$plan")
-    } finally {
-      spark.conf.set(useStats, s0); spark.conf.set(ratio, r0)
     }
   }
 

@@ -96,9 +96,7 @@ class Relational2Spec extends AnyFunSuite {
       "(and salts only under real skew)") {
     // at gate SF the build side broadcasts (no exchange to inspect);
     // force the shuffled path a 100-TB fact-fact join would take
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val q = Registry.queries("q125_salted_join")(spark, dir)
       val plan = q.queryExecution.executedPlan.toString
       // l_orderkey is near-uniform, so the catalog's MCV tier must
@@ -111,7 +109,7 @@ class Relational2Spec extends AnyFunSuite {
         s"uniform keys must ride the unsalted plan:\n$plan")
       assert(plan.contains("hashpartitioning(l_orderkey"),
         s"the join must still shuffle on the key:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q118 edit verify: DP ground truth on candidate pairs") {

@@ -25,10 +25,10 @@ class ScratchDirContractSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(scratchBase))
     fs.mkdirs(new Path(gateBase))
-    spark.conf.set(graft.streaming.StreamScratch.ScratchKey, scratchBase)
-    spark.conf.set(graft.streaming.GateOut.DirKey, gateBase)
     val renames0 = MockS3FileSystem.renames.get()
-    try {
+    GraftSession.withConf(spark,
+        graft.streaming.StreamScratch.ScratchKey -> scratchBase,
+        graft.streaming.GateOut.DirKey -> gateBase) {
       val dir = "/root/testdata/sf0.001"
       val res = Registry.queries("q63_stream_dedup")(spark, dir)
 
@@ -59,9 +59,6 @@ class ScratchDirContractSpec extends AnyFunSuite {
       // copy+delete rename, so the run really took the object-store path
       assert(MockS3FileSystem.renames.get() > renames0,
         "no rename hit the object-store path — contract not exercised")
-    } finally {
-      spark.conf.unset(graft.streaming.StreamScratch.ScratchKey)
-      spark.conf.unset(graft.streaming.GateOut.DirKey)
     }
   }
 }

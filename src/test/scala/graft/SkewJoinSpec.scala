@@ -16,26 +16,14 @@ class SkewJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("AQE splits a skewed join partition at runtime (skew=true in final plan)") {
-    import spark.implicits._
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.adaptive.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-
+    GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       // 50k rows on ONE key (incompressible payload) vs 50 spread keys
       val fact = spark.range(50000)
         .select(lit(0L).as("k"), md5(col("id").cast("string")).as("payload"))
@@ -54,46 +42,6 @@ class SkewJoinSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not mark the skewed join:\n$finalPlan")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
-  }
-
-  test("hot-salted join replicates ONLY flagged keys and matches plain join") {
-    import spark.implicits._
-    // one hot key (5000 rows) among 100 cold keys (~5 rows each)
-    val probe = spark.range(5000)
-      .select(lit(0L).as("k"), col("id").as("spread"),
-        (col("id") % 10).as("v"))
-      .union(spark.range(500).select((col("id") % 100 + 1).as("k"),
-        col("id").as("spread"), (col("id") % 10).as("v")))
-    val build = spark.range(101).select(col("id").as("bk"),
-      concat(lit("name-"), col("id")).as("name"))
-
-    val hot = graft.util.Salting.hotKeys(probe, "k")
-      .as[Long].collect().toSet // bounded collect: heavy-hitter set
-    assert(hot == Set(0L), s"expected exactly the hot key, got $hot")
-
-    val salted = graft.util.Salting.hotSaltedJoin(probe, build,
-      "k", "bk", spread = col("spread"))
-    val plain = probe.join(build, col("k") === col("bk"))
-    def agg(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(col("name"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    assert(agg(salted) == agg(plain), "salting changed the join result")
-
-    // replication really is hot-only: cold build rows must NOT fan out
-    val buildSide = build
-      .join(org.apache.spark.sql.functions.broadcast(
-        graft.util.Salting.hotKeys(probe, "k")
-          .withColumnRenamed("k", "__hot")),
-        col("bk") === col("__hot"), "left")
-      .withColumn("nSalt",
-        when(col("__hot").isNotNull, lit(8)).otherwise(lit(1)))
-    val expected = buildSide.agg(sum(col("nSalt"))).head().getLong(0)
-    assert(expected == 100L + 8L, // 100 cold × 1 + 1 hot × 8
-      s"hot-only replication bound violated: $expected")
   }
 }
