@@ -15,30 +15,11 @@ final case class QueryDef(
     doc: String)
 
 object Registry {
-  /** Ordered registry of all query batteries. */
+  /** Every registered query: one list per domain package under `graft.ops`. */
   def all: Seq[(String, QueryDef)] =
-    ops.Relational.defs ++ ops.Cdc.defs ++ ops.Dedup.defs ++
-      ops.TextAnalysis.defs ++ ops.Similarity.defs ++ ops.Extras.defs ++
-      ops.Curation.defs ++ ops.Training.defs ++ ops.Tokenizer.defs ++
-      ops.Filtering.defs ++ ops.CorpusOps.defs ++ ops.Relational2.defs ++
-      ops.Materialize.defs ++ ops.Graphs.defs ++ ops.Advanced.defs ++
-      ops.Wave7.defs ++ ops.Wave8.defs ++ ops.Wave9.defs ++
-      ops.Wave10.defs ++ ops.Wave11.defs ++ ops.Wave12.defs ++
-      ops.Wave13.defs ++ ops.Wave14.defs ++ ops.Wave15.defs ++
-      ops.Wave16.defs ++ ops.Wave17.defs ++ ops.Wave18.defs ++
-      ops.Wave19.defs ++ ops.Wave20.defs ++ ops.Wave21.defs ++
-      ops.Wave22.defs ++ ops.Wave23.defs ++ ops.Wave24.defs ++
-      ops.Wave25.defs ++ ops.Wave26.defs ++ ops.Wave27.defs ++
-      ops.Wave28.defs ++ ops.Wave30.defs ++ ops.Wave31.defs ++
-      ops.Wave32.defs ++ ops.Wave33.defs ++ ops.Wave34.defs ++
-      ops.Wave35.defs ++ ops.Wave36.defs ++ ops.Wave37.defs ++
-      ops.Wave38.defs ++ ops.Wave39.defs ++ ops.Wave40.defs ++
-      ops.Wave41.defs ++ ops.Wave42.defs ++ ops.Wave43.defs ++
-      ops.Wave44.defs ++ ops.Wave45.defs ++ ops.Wave46.defs ++
-      ops.Wave47.defs ++ ops.Wave48.defs ++ ops.Wave49.defs ++
-      ops.Wave50.defs ++ ops.Wave51.defs ++ ops.Wave52.defs ++
-      ops.Wave53.defs ++ ops.Wave54.defs ++ ops.Wave55.defs ++
-      ops.Wave56.defs
+    ops.relational.defs ++ ops.cdc.defs ++ ops.curation.defs ++
+      ops.similarity.defs ++ ops.graph.defs ++ ops.stats.defs ++
+      ops.media.defs ++ ops.streams.defs ++ ops.tableops.defs
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (n, d) => n -> d.build }.toMap

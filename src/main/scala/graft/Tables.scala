@@ -47,8 +47,4 @@ object Tables {
   /** Exact decimal sum of a double column, emitted as double. */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
-  /** Exact decimal average (decimal sum / count), emitted as double. */
-  def davg(c: Column, scale: Int = 4): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType) / count(lit(1))
 }

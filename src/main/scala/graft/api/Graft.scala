@@ -206,10 +206,6 @@ final class Graft(val spark: SparkSession, stateDir: String) {
         max(col("lastTxId")).as("max_txid"))
 
   // ── streaming / watermark ────────────────────────────────────────────
-  def startStream(inDir: String, checkpoint: String,
-      queryName: String): StreamingQuery =
-    ChangeStreamPipeline.start(inDir, checkpoint, queryName)
-
   /** Tx high-watermark of the persisted state (A4 parity). */
   def watermark(): Long = {
     val r = stateTable.agg(max(col("lastTxId"))).as[Option[Long]].head()
@@ -236,9 +232,6 @@ final class Graft(val spark: SparkSession, stateDir: String) {
   // the registry by path hash and prune to one bucket per lookup.
 
   @volatile private var snapshotService: Boolean = false
-
-  /** Whether /admin/snapshot/start has run in this facade's lifetime. */
-  def snapshotStarted: Boolean = snapshotService
 
   /** Initialize the snapshot service: build the replica registry from
     * the CURRENT state table (one row per live tracked file, ref
@@ -445,85 +438,6 @@ object Graft {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/zonemap")
   }
-
-  /** Stats-driven join (round-11 verdict ask #4 — the q295/q314 CBO
-    * loop APPLIED): ANALYZE the fact column into an equi-depth
-    * histogram, estimate the filtered cardinality, and pick the
-    * physical strategy — broadcast the filtered fact side when the
-    * estimate fits the `1/broadcastDiv` budget, else pin the shuffle
-    * path. Returns (joined, estimatedRows, "broadcast"|"shuffle");
-    * AnalyzedJoinSpec gates that the EXECUTED plan matches the
-    * decision and the decision matches optimal-from-exact. See
-    * [[graft.ops.StatsPlanner]] for the distributed ANALYZE shape. */
-  def analyzedJoin(fact: DataFrame, valueCol: String, gt: Long,
-      dim: DataFrame, joinCond: org.apache.spark.sql.Column,
-      broadcastDiv: Long = 20L): (DataFrame, Long, String) =
-    graft.ops.StatsPlanner.analyzedJoin(fact, valueCol, gt, dim,
-      joinCond, broadcastDiv)
-
-  /** [[analyzedJoin]] reading a PERSISTED q295-shaped stats table —
-    * ANALYZE once (the nightly q295 export), plan many with zero
-    * plan-time fact scans. */
-  def analyzedJoinFromStats(fact: DataFrame, valueCol: String, gt: Long,
-      dim: DataFrame, joinCond: org.apache.spark.sql.Column,
-      statsTable: DataFrame, statsColumn: String,
-      broadcastDiv: Long = 20L): (DataFrame, Long, String) =
-    graft.ops.StatsPlanner.analyzedJoinFromStats(fact, valueCol, gt,
-      dim, joinCond, statsTable, statsColumn, broadcastDiv)
-
-  /** MCV-driven skew-salted equi-join (round-12 verdict ask #1): the
-    * q295 catalog's most-common-value tier decides which keys get the
-    * salt treatment — hot probe rows spread across `nSalts` reducers,
-    * only matching build rows replicate, cold keys join untouched.
-    * For the stages AQE cannot re-plan; zero plan-time scans (the
-    * decision reads the persisted stats table). Returns (joined, hot
-    * keys). See [[graft.ops.StatsPlanner.skewedJoinFromStats]]. */
-  def skewedJoin(probe: DataFrame, probeKey: String, build: DataFrame,
-      buildKey: String, spread: org.apache.spark.sql.Column,
-      statsTable: DataFrame, statsColumn: String, hotDiv: Long = 10L,
-      nSalts: Int = 8): (DataFrame, Seq[Long]) =
-    graft.ops.StatsPlanner.skewedJoinFromStats(probe, probeKey, build,
-      buildKey, spread, statsTable, statsColumn, hotDiv, nSalts)
-
-  /** Cardinality-driven multi-way join order (round-12 verdict ask
-    * #3): dims join most-selective-first by histogram estimate, each
-    * side pinned broadcast-vs-shuffle under the absolute row cap.
-    * Returns (joined, per-dim decisions). See
-    * [[graft.ops.StatsPlanner.orderedJoin]]. */
-  def orderedJoin(fact: DataFrame,
-      dims: Seq[graft.ops.StatsPlanner.JoinDim], numBuckets: Int = 16,
-      maxBroadcastRows: Long = 5000000L)
-      : (DataFrame, Seq[graft.ops.StatsPlanner.DimPlan]) =
-    graft.ops.StatsPlanner.orderedJoin(fact, dims, numBuckets,
-      maxBroadcastRows)
-
-  /** Incremental ANALYZE (round-12 verdict stretch #8): fold an
-    * export over ONLY a new data slice into yesterday's persisted
-    * q295-shaped export — pure catalog-row arithmetic, no base
-    * re-scan. `slice` is ANALYZEd here ([[graft.ops.StatsPlanner
-    * .exportStats]]); pass the result anywhere a stats table is
-    * consumed ([[analyzedJoinFromStats]], [[skewedJoin]],
-    * [[orderedJoin]] via its per-dim analyze). q320 gates the merged
-    * estimates against a full recompute. */
-  def incrementalStats(oldStats: DataFrame, slice: DataFrame,
-      column: String, numBuckets: Int = 16, mcvK: Int = 4): DataFrame =
-    graft.ops.StatsPlanner.mergeStatsExports(oldStats,
-      graft.ops.StatsPlanner.exportStats(slice, column, numBuckets,
-        mcvK), column, numBuckets, mcvK)
-
-  /** Stats staleness guard (round-11 CBO triad, leg (c)): compare the
-    * persisted export's row count against the live table; past
-    * `maxDriftPpm` drift, fold the `delta` slice in via the q320
-    * incremental merge and return the refreshed export, else the
-    * original untouched. Returns (stats to plan from, staleness
-    * verdict). q321 oracle-gates the drift arithmetic and the flipped
-    * decision; StaleStatsSpec pins the executed plans. */
-  def refreshIfStale(stats: DataFrame, column: String, fact: DataFrame,
-      delta: DataFrame, maxDriftPpm: Long = 200000L,
-      numBuckets: Int = 16, mcvK: Int = 4)
-      : (DataFrame, graft.ops.StatsPlanner.Staleness) =
-    graft.ops.StatsPlanner.refreshIfStale(stats, column, fact, delta,
-      maxDriftPpm, numBuckets, mcvK)
 
   /** Rectangle scan over a [[writeHilbertLayout]] table: consult the
     * zone-map manifest, read ONLY the files whose bounds intersect the

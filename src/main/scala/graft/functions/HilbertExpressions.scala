@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * The (3·rx) XOR ry term is spelled `rx=1 ? 3-ry : ry` so the DuckDB
   * oracle can state the identical arithmetic without dialect-specific
   * XOR (rx, ry ∈ {0,1} makes them equal). The oracle unrolls the same
-  * 16 steps as generated SQL — see Wave43.hilbertSqlSteps. */
+  * 16 steps as generated SQL — see `LayoutKeys.hilbertSqlChain`. */
 case class HilbertIndex2(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the MinHash+LSH BAND KEYS of a text
   * — the SQL-callable form of the dedup battery's banding stage
-  * (`graft.ops.Dedup.bandTable`, q35/q72/q144), registered as
+  * (`graft.ops.MinHash.bandTable`, q35/q72/q144), registered as
   * `graft_minhash_bands(text, bands, rows)` by [[GraftExtensions]] so
   * a pure-SQL user reaches LSH dedup with
   *

@@ -52,12 +52,6 @@ object FsImageBinary {
       while (i < 8) { v |= (b(o) & 0xffL) << (8 * i); o += 1; i += 1 }
       v
     }
-    def fixed32(): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 4) { v |= (b(o) & 0xffL) << (8 * i); o += 1; i += 1 }
-      v
-    }
     def bytes(): Array[Byte] = {
       val n = varint().toInt; val v = java.util.Arrays.copyOfRange(b, o, o + n)
       o += n; v

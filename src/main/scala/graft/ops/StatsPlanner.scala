@@ -200,7 +200,7 @@ object StatsPlanner {
     * untouched on salt 0. This is the manual treatment for stages AQE
     * cannot re-plan (pre-partitioned stateful stages, fixed
     * mid-pipeline exchanges — see the round-7 skew measurement in
-    * BASELINE.md and q125's doc in `Relational2`), now driven by
+    * BASELINE.md and q125's doc in `relational/Reshape`), now driven by
     * PERSISTED stats instead of a runtime frequency pass: zero
     * plan-time scans, and
     * the hot-key decision itself is oracle-checkable (q317). Returns

@@ -159,10 +159,14 @@ object FileStateFSM {
     }
   }
 
+  /** Fold one path's events into `st0` in txId order (a stable sort, so
+    * events sharing a txId keep their arrival order). */
+  def fold(st0: FileState, events: Iterator[ChangeEvent]): FileState =
+    events.toSeq.sortBy(_.txId).foldLeft(st0)(transition)
+
   /** Ordered replay of one path's events. */
   def replay(path: String, events: Iterator[ChangeEvent]): FileState =
-    events.toSeq.sortBy(_.txId)
-      .foldLeft(FileState(path))(transition)
+    fold(FileState(path), events)
 
   /** Batch replay: one shuffle on path, then an independent ordered fold
     * per key — the plan that survives 100× scale (no global order, no
@@ -187,8 +191,7 @@ object FileStateFSM {
     initial.groupByKey(_.path)
       .cogroup(events.groupByKey(_.path)) { (p, inits, evs) =>
         val st0 = inits.toSeq.headOption.getOrElse(FileState(p))
-        val st1 = evs.toSeq.sortBy(_.txId).foldLeft(st0)(transition)
-        Iterator.single(st1)
+        Iterator.single(fold(st0, evs))
       }
   }
 }

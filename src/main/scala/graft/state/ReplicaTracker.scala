@@ -82,10 +82,6 @@ object ReplicaTracker {
       .withColumn("lag", col("last_txid") - col("last_replicated_tx"))
       .withColumn("backlog", col("lag") > 0)
 
-  /** Files needing delta replication (seen head > replicated head). */
-  def pending(reconciled: DataFrame): DataFrame =
-    reconciled.filter(col("lag") > 0)
-
   /** The synthesized Backlog CloseFile events of the snapshot-done
     * handshake (`HDFSSnapshotProcessor.java:234-286`): one per file
     * whose live head advanced past its snapshot, stamped at the live

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.model.{ChangeEvent, FileState}
 import graft.state.FileStateFSM
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming form of the CDC pipeline (SURVEY §3.2): decoded
@@ -65,7 +65,7 @@ object ChangeStreamPipeline {
   def fsmStep(path: String, events: Iterator[ChangeEvent],
       state: GroupState[FileState]): Iterator[FileState] = {
     val st0 = state.getOption.getOrElse(FileState(path))
-    val st1 = events.toSeq.sortBy(_.txId).foldLeft(st0)(FileStateFSM.transition)
+    val st1 = FileStateFSM.fold(st0, events)
     state.update(st1)
     Iterator.single(st1)
   }
@@ -94,6 +94,34 @@ object ChangeStreamPipeline {
         GroupStateTimeout.NoTimeout)(fsmStep)
   }
 
+  /** JSON-lines files under `inDir` as a streaming `value` column. */
+  private def textSource(inDir: String, maxFilesPerTrigger: Option[Int])(
+      implicit spark: SparkSession): DataFrame = {
+    val reader = spark.readStream.schema(
+      StructType(Seq(StructField("value", StringType))))
+    maxFilesPerTrigger
+      .map(n => reader.option("maxFilesPerTrigger", n))
+      .getOrElse(reader)
+      .text(inDir)
+  }
+
+  /** Start the keyed FSM over raw JSON lines: decode → [[stateStream]]
+    * → `sink`, update mode, AvailableNow, checkpointed at `checkpoint`. */
+  private def startFsm(raw: DataFrame, checkpoint: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])(
+      implicit spark: SparkSession): StreamingQuery =
+    sink(stateStream(decode(raw)).toDF().writeStream.outputMode("update"))
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Sink appending each micro-batch's updated states as parquet. */
+  private def appendParquet(outDir: String)(
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.foreachBatch { (batch: DataFrame, _: Long) =>
+      batch.write.mode("append").parquet(outDir)
+    }
+
   /** Wire the full streaming query: JSON-lines event files under
     * `inDir` → FSM → in-memory table `name` (tests/dev) with a
     * checkpoint. Swap the source/sink for Kafka on a cluster with the
@@ -101,21 +129,8 @@ object ChangeStreamPipeline {
   def start(inDir: String, checkpoint: String, name: String,
       maxFilesPerTrigger: Option[Int] = None)(
       implicit spark: SparkSession): StreamingQuery = {
-    val reader = spark.readStream.schema(
-      StructType(Seq(StructField("value", StringType))))
-    val raw = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n))
-      .getOrElse(reader)
-      .text(inDir)
-      .withColumnRenamed("value", "value")
-    stateStream(decode(raw)).toDF()
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startFsm(textSource(inDir, maxFilesPerTrigger), checkpoint)(
+      _.format("memory").queryName(name))
   }
 
   /** Same pipeline with a FILE sink: each micro-batch's updated states
@@ -127,12 +142,6 @@ object ChangeStreamPipeline {
       maxFilesPerTrigger: Option[Int] = None,
       statePartitions: Option[Int] = None)(
       implicit spark: SparkSession): StreamingQuery = {
-    val reader = spark.readStream.schema(
-      StructType(Seq(StructField("value", StringType))))
-    val raw = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n))
-      .getOrElse(reader)
-      .text(inDir)
     // The stateful shuffle's partition count is frozen into the checkpoint
     // at first start, and each state partition owns a full store instance
     // (a RocksDB under this provider) whose open/commit/checkpoint cost is
@@ -144,15 +153,8 @@ object ChangeStreamPipeline {
     // concurrent batch queries once restored.
     graft.GraftSession.withConf(spark, statePartitions.toSeq
         .map(n => "spark.sql.shuffle.partitions" -> n.toString): _*) {
-      stateStream(decode(raw)).toDF()
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      startFsm(textSource(inDir, maxFilesPerTrigger), checkpoint)(
+        appendParquet(outDir))
     }
   }
 
@@ -263,15 +265,7 @@ object ChangeStreamPipeline {
       .option("includeHeaders", "true")
       .load()
       .selectExpr("CAST(value AS STRING) AS value")
-    stateStream(decode(raw)).toDF()
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startFsm(raw, checkpoint)(appendParquet(outDir))
   }
 
   /** Kafka sink for the routed event stream: [[toKafkaRecords]]'

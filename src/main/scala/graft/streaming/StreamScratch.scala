@@ -45,7 +45,7 @@ object StreamScratch {
     * `transformWithState`) to one query on a SHARED session: the
     * previous provider — including "unset" — is restored on exit, so a
     * gate can never silently re-provider every later streaming query in
-    * the same bench/verify session (the Materialize.scala contract,
+    * the same bench/verify session (the q129 contract,
     * factored out so every transformWithState gate uses it). */
   def withRocksDb[T](s: SparkSession)(body: => T): T =
     graft.GraftSession.withConf(s, ProviderKey -> RocksDbProvider)(body)

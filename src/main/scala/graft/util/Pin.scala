@@ -65,7 +65,7 @@ object Pin {
     * 64 GiB heap mid-materialization (the q270 sf10 failure, measured
     * rounds 12-13). Every rung up to sf1 (≈2.4M directed edges on the
     * graph queries) stays on the fast in-memory path. Shared by every
-    * iterative loop (Wave39 peel, Wave24 k-core, connected
+    * iterative loop (q270 peel, q243 k-core, connected
     * components, PageRank) so the OOM class is retired once, not per
     * call site. */
   val SpillRows = 50000000L
@@ -90,7 +90,7 @@ object Pin {
     * garbage-collect, unlike the reliable mode), and lineage is
     * truncated the same way. The extra read cost is the right trade
     * only once the frame outgrows memory — callers gate on measured
-    * size (see Wave39's peel bound). */
+    * size (see q270's peel bound). */
   def spill[T](df: Dataset[T]): Dataset[T] =
     capStats(df.localCheckpoint(eager = true,
       org.apache.spark.storage.StorageLevel.DISK_ONLY))

@@ -136,7 +136,7 @@ class ExtensionsSpec extends AnyFunSuite {
       """SELECT doc_id, explode(graft_minhash_bands(text, 4, 2)) AS band
         |FROM docs""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val viaBattery = graft.ops.Dedup.bandTable(docs)
+    val viaBattery = graft.ops.MinHash.bandTable(docs)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(viaSql == viaBattery,
       "SQL band keys diverged from the DataFrame battery's bandTable")

@@ -136,7 +136,8 @@ class MergeStatsSpec extends AnyFunSuite {
     val delta = (1 to 400).map(i => (i.toLong + 10000L, i.toLong))
       .toDF("k", "p")
     val oldStats = StatsPlanner.exportStats(base, "k", B, 4)
-    val mergedStats = graft.api.Graft.incrementalStats(oldStats, delta, "k", B, 4)
+    val mergedStats = StatsPlanner.mergeStatsExports(oldStats,
+      StatsPlanner.exportStats(delta, "k", B, 4), "k", B, 4)
     val (n, mcv) = StatsPlanner.mcvFromStats(mergedStats, "k")
     assert(n == 4400L)
     val hot = mcv.filter(_.n > n / 10L).map(_.v)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry hygiene at 250+ queries: the invariants the driver's gate
@@ -7,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * numeric ids, id contiguity against the documented historical gap
   * ledger (COVERAGE.md "Query-ID ledger"), and an oracle for every
   * entry (a missing oracle silently downgrades the driver row to a
-  * weaker rows-only check).
+  * weaker rows-only check). Two source scans keep `ops/` organized by
+  * domain: no file or object is named for the round that wrote it, and
+  * no query file reaches into another query file for a helper — shared
+  * helpers live in files that register no query.
   */
 class RegistryManifestSpec extends AnyFunSuite {
 
@@ -65,5 +70,44 @@ class RegistryManifestSpec extends AnyFunSuite {
     }
     assert(undocumented.isEmpty,
       s"undocumented queries: ${undocumented.mkString(", ")}")
+  }
+
+  private lazy val opsFiles: Seq[Path] =
+    Files.walk(Paths.get("src/main/scala/graft/ops")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+
+  /** Source text with comments dropped (a `//` inside a string cuts the
+    * rest of its line too — harmless for a reference scan). */
+  private def code(p: Path): String =
+    Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .split("\n").map(_.replaceAll("//.*$", "")).mkString("\n")
+
+  private val ObjectDecl = "(?m)^\\s*(?:private\\S*\\s+)?object\\s+(\\w+)".r
+
+  test("ops/ is organized by domain: no file or object named for a round") {
+    val RoundName = "^(Wave\\d+|Advanced|Extras|Relational2)$".r
+    val named = opsFiles.flatMap { p =>
+      val file = p.getFileName.toString.stripSuffix(".scala")
+      (file +: ObjectDecl.findAllMatchIn(code(p)).map(_.group(1)).toSeq)
+        .filter(n => RoundName.findFirstIn(n).isDefined).distinct.map(n => s"$p: $n")
+    }
+    assert(named.isEmpty, s"round-named ops files/objects: ${named.mkString(", ")}")
+  }
+
+  test("no query file references a helper defined in another query file") {
+    val queryFiles = opsFiles.filter(p => code(p).contains("QueryDef("))
+    assert(queryFiles.size >= 9, queryFiles)
+    val owner: Map[String, Path] = queryFiles.flatMap { p =>
+      ObjectDecl.findAllMatchIn(code(p)).map(_.group(1) -> p)
+    }.toMap
+    val reachIns = for {
+      p <- queryFiles
+      text = code(p)
+      (obj, home) <- owner.toSeq if home != p
+      if s"(?<!\\w)$obj\\.[A-Za-z_]".r.findFirstIn(text).isDefined
+    } yield s"$p -> $obj ($home)"
+    assert(reachIns.isEmpty,
+      s"move shared helpers out of query files: ${reachIns.mkString("; ")}")
   }
 }

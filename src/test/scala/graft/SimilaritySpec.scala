@@ -70,18 +70,18 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sign planes are deterministic ±1 and distinct across indices") {
-    val p = ops.Similarity.signPlanes(8)
+    val p = ops.similarity.Vectors.signPlanes(8)
     assert(p.forall(_.forall(x => x == 1.0 || x == -1.0)))
     assert(p.map(_.toSeq).distinct.length == 8)
     // stable across invocations (the oracle embeds these as literals)
-    assert(p.map(_.toSeq).toSeq == ops.Similarity.signPlanes(8).map(_.toSeq).toSeq)
+    assert(p.map(_.toSeq).toSeq == ops.similarity.Vectors.signPlanes(8).map(_.toSeq).toSeq)
   }
 
   test("rBits scales with corpus size") {
-    assert(ops.Similarity.rBits(500) == 4)
-    assert(ops.Similarity.rBits(2000) == 6)
-    assert(ops.Similarity.rBits(1000000) == 15)
-    assert(ops.Similarity.rBits(1000000000) >= 24)
+    assert(ops.similarity.Vectors.rBits(500) == 4)
+    assert(ops.similarity.Vectors.rBits(2000) == 6)
+    assert(ops.similarity.Vectors.rBits(1000000) == 15)
+    assert(ops.similarity.Vectors.rBits(1000000000) >= 24)
   }
 
   test("minhash candidates superset high-jaccard doc pairs (LSH soundness on shared bands)") {
@@ -115,7 +115,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(r.getLong(2) <= 3)
     }
     // cross-check against the direct (unbanded) pair filter on fingerprints
-    val fp = ops.Dedup.simhash64(spark, dir)
+    val fp = ops.curation.Dedup.simhash64(spark, dir)
     val direct = fp.as("a").join(fp.as("b"),
         col("a.doc_id") < col("b.doc_id") &&
           expr("bit_count(a.simhash ^ b.simhash) <= 3"))

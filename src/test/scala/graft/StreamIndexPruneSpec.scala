@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.curation.Dedup
 import graft.streaming.StreamScratch.withScratch
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -40,7 +40,7 @@ class StreamIndexPruneSpec extends AnyFunSuite {
       // a 1-doc batch has exactly Bands (=4) band keys → ≤ 4 of the 16
       // bucket partitions are touched
       val one = Seq(doc(999L)).toDF("doc_id", "text")
-      val touched = Dedup.bandTable(one)
+      val touched = graft.ops.MinHash.bandTable(one)
         .withColumn("bucket", pmod(hash(col("band")), lit(Dedup.IndexBuckets)))
         .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
       assert(touched.nonEmpty && touched.size <= 4,
@@ -78,7 +78,7 @@ class StreamIndexPruneSpec extends AnyFunSuite {
         .select(col("doc_a"), col("doc_b")).distinct()
         .as[(Long, Long)].collect().toSet
       val all = batches.flatten.distinct.toDF("doc_id", "text")
-      val bands = Dedup.bandTable(all)
+      val bands = graft.ops.MinHash.bandTable(all)
       val batch = bands.as("x").join(bands.as("y"),
           col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))

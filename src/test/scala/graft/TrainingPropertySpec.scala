@@ -140,7 +140,7 @@ class TrainingPropertySpec extends AnyFunSuite {
     // must sit within (mx-mn)/255/2 of x for every component — the
     // defining property of the scalar quantizer the checksum gate
     // cannot see directly
-    val bad = graft.ops.Training
+    val bad = graft.ops.curation.Training
       .quantizeCodes(spark, "/root/testdata/sf0.001")
       .withColumn("decoded",
         col("mn") + col("code") * (col("mx") - col("mn")) / 255.0)

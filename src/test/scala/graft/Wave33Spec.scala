@@ -57,7 +57,7 @@ class Wave33Spec extends AnyFunSuite {
     // |A∩B|, so pruning a true pair would be a soundness bug), and the
     // bound must actually prune (candidates > survivors) — the whole
     // point of the PPJoin+-style cut.
-    val st = ops.Wave33.setSimStages(spark, "/root/testdata/sf0.001")
+    val st = ops.similarity.SetJoin.setSimStages(spark, "/root/testdata/sf0.001")
     val survivors = st.verifyIn.select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truePairs = st.pairs.select("a", "b").collect()
@@ -68,7 +68,7 @@ class Wave33Spec extends AnyFunSuite {
     // positional filters are already perfect there — nothing left to
     // prune), so the prunes-something property is asserted at sf0.1,
     // where the measured cut is 99.6% (BASELINE.md round-10 ladder)
-    val st01 = ops.Wave33.setSimStages(spark, "/root/testdata/sf0.1")
+    val st01 = ops.similarity.SetJoin.setSimStages(spark, "/root/testdata/sf0.1")
     val nCands = st01.cands.count()
     val nSurv = st01.verifyIn.count()
     assert(nCands > nSurv,

@@ -57,7 +57,7 @@ class Wave45Spec extends AnyFunSuite {
 
   test("q288 equals an independently replayed deterministic walker") {
     import spark.implicits._
-    graft.ops.Graphs.invalidateStrongEdges()
+    graft.ops.graph.CoPurchase.invalidateStrongEdges()
     val tmp = java.nio.file.Files.createTempDirectory("graft_w45b_").toString
     val rng = new scala.util.Random(31)
     // co-purchase fixture: 40 orders x 4 parts from a 30-part pool,
@@ -97,6 +97,6 @@ class Wave45Spec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toList
     assert(got == want.toList, s"got=${got.take(5)}… want=${want.take(5)}…")
-    graft.ops.Graphs.invalidateStrongEdges()
+    graft.ops.graph.CoPurchase.invalidateStrongEdges()
   }
 }

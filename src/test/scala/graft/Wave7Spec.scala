@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.MinHash
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,7 +107,7 @@ class Wave7Spec extends AnyFunSuite {
     assert(out("b8r1") >= out("b4r2") && out("b4r2") >= out("b2r4"),
       "candidate count must be monotone in the band count")
     // the b4r2 plan IS the production q35 banding: counts must agree
-    val bands = Dedup.bandTable(Tables.load(spark, dir, "documents"))
+    val bands = MinHash.bandTable(Tables.load(spark, dir, "documents"))
     val prod = bands.as("x")
       .join(bands.as("y"), col("x.band") === col("y.band") &&
         col("x.doc_id") < col("y.doc_id"))
