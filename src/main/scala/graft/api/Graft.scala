@@ -5,8 +5,9 @@ import graft.filters.DomainFilters.Filter
 import graft.model.{ChangeEvent, FileState, Mode, Op, ReplicaState}
 import graft.state.{FileStateFSM, RenameExpander, ReplicaTracker}
 import graft.streaming.ChangeStreamPipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Thin management facade — the Spark-native replacement for the
@@ -71,34 +72,30 @@ final class Graft(val spark: SparkSession, stateDir: String) {
   def replayIncrement(events: Dataset[ChangeEvent]): Dataset[FileState] = {
     val ev = RenameExpander.expandFileRenames(events)
     val touched = ev.toDF().select(col("path")).distinct()
-    val base = stateTable.toDF()
-      .join(touched, Seq("path"), "left_semi").as[FileState]
+    val base = files.table(only = Some(touched)).as[FileState]
     val updated = FileStateFSM.replayWithInit(base, ev)
     persist(updated)
     if (versions().size > Graft.AutoCompactAfter) compact()
     stateTable
   }
 
-  /** Columns added to FileState after a store was written get default
-    * values on read, so a persisted store survives model evolution
-    * (e.g. `blocks`/`chainKnown` did not exist in early versions).
+  /** Columns added to FileState after a store was written read back as
+    * nulls under the pinned model schema and get defaults here, so a
+    * persisted store survives model evolution (`blocks`/`chainKnown`/
+    * `nAppends` did not exist in early versions). `blocks` defaults to
+    * the empty chain with `chainKnown = false` — the fsimage bootstrap's
+    * "chain not loaded" form, which the FSM folds onto.
     * NOTE: streaming-FSM checkpoints do NOT get this treatment — a
     * state-schema change requires a fresh checkpoint (bootstrap from
     * the state table, then resume the stream). */
-  private def backfillDefaults(df: DataFrame): DataFrame = {
-    val have = df.columns.toSet
-    Seq(
-      "blocks" -> lit(null).cast(
-        "array<struct<blockId:bigint,prevBlockId:bigint,numBytes:bigint,lastTxId:bigint>>"),
-      "chainKnown" -> lit(false), // unknown provenance → chain unknown
-      "nAppends" -> lit(0L))
-      .foldLeft(df) { case (acc, (name, default)) =>
-        if (have(name)) acc else acc.withColumn(name, default)
-      }
-  }
+  private val fileDefaults = Seq(
+    "blocks" -> array().cast(
+      "array<struct<blockId:bigint,prevBlockId:bigint,numBytes:bigint,lastTxId:bigint>>"),
+    "chainKnown" -> lit(false), // unknown provenance → chain unknown
+    "nAppends" -> lit(0L))
 
   /** Merged view: base + deltas, newest version wins per path. */
-  def stateTable: Dataset[FileState] = files.table.as[FileState]
+  def stateTable: Dataset[FileState] = files.table().as[FileState]
 
   /** Fold all versions into a single new base and prune the old ones. */
   def compact(): Unit = files.compact()
@@ -116,11 +113,17 @@ final class Graft(val spark: SparkSession, stateDir: String) {
 
   /** One versioned table under `stateDir` (the state table and the
     * replica registry share the protocol above): `<prefix>_v<N>` dirs,
-    * committed by their `_SUCCESS` marker, each read through `read` and
+    * committed by their `_SUCCESS` marker, read under the model
+    * `schema` with `defaults` filling columns older versions lack, and
     * merged with the newest version winning per path. */
-  private final class Versioned(prefix: String, read: DataFrame => DataFrame,
-      missing: String) {
+  private final class Versioned(prefix: String, schema: => StructType,
+      defaults: Seq[(String, Column)], missing: String) {
     private val re = (java.util.regex.Pattern.quote(prefix) + """_v(\d+)""").r
+    // a row's version is its file's parent dir — anchored at the end so
+    // a `stateDir` that itself contains `<prefix>_v<N>/` cannot match
+    private val fileVersion =
+      "/" + java.util.regex.Pattern.quote(prefix) + """_v(\d+)/[^/]+$"""
+    private lazy val modelSchema = schema
     private def dir(v: Long) = s"${prefix}_v$v"
 
     /** Every version dir on disk, committed or not — the next write must
@@ -139,22 +142,31 @@ final class Graft(val spark: SparkSession, stateDir: String) {
 
     def delete(vs: Seq[Long]): Unit = vs.foreach(v => fs.delete(hpath(dir(v)), true))
 
-    def table: DataFrame = {
+    /** The merged view: every committed version in ONE scan under the
+      * model schema, so building it launches no schema-inference job.
+      * `only` keeps just those paths, applied below the newest-wins
+      * window so only they are windowed. */
+    def table(only: Option[DataFrame] = None): DataFrame = {
       val vs = versions()
       require(vs.nonEmpty, missing)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("path")).orderBy(col("__v").desc)
-      vs.map(v => read(spark.read.parquet(s"$stateDir/${dir(v)}"))
-          .withColumn("__v", lit(v)))
-        .reduce(_ unionByName _)
+      val scan = spark.read.schema(modelSchema)
+        .parquet(vs.map(v => s"$stateDir/${dir(v)}"): _*)
+        .withColumn("__v",
+          regexp_extract(col("_metadata.file_path"), fileVersion, 1).cast("long"))
+      val merged = only.fold(scan)(scan.join(_, Seq("path"), "left_semi"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__v", "__rn")
+      defaults.foldLeft(merged) { case (acc, (name, default)) =>
+        acc.withColumn(name, coalesce(col(name), default))
+      }
     }
 
     def compact(): Unit = {
       val vs = versions()
-      write(graft.util.Pin(table))
+      write(graft.util.Pin(table()))
       delete(vs)
     }
 
@@ -169,16 +181,18 @@ final class Graft(val spark: SparkSession, stateDir: String) {
       cache match {
         case Some((`vs`, df)) => df
         case _ =>
-          val pinned = graft.util.Pin(table)
+          val pinned = graft.util.Pin(table())
           cache = Some((vs, pinned))
           pinned
       }
     }
   }
 
-  private val files = new Versioned("files", backfillDefaults,
+  private val files = new Versioned("files",
+    Encoders.product[FileState].schema, fileDefaults,
     s"no state versions under $stateDir")
-  private val replicas = new Versioned("replicas", identity,
+  private val replicas = new Versioned("replicas",
+    Encoders.product[ReplicaState].schema, Nil,
     s"no replica registry under $stateDir — POST /admin/snapshot/start first")
 
   // ── snapshot (HDFSSnapshotProcessor parity) ──────────────────────────
@@ -255,7 +269,7 @@ final class Graft(val spark: SparkSession, stateDir: String) {
 
   /** Merged replica registry (base + one-row callback deltas, newest
     * version wins per path). */
-  def replicaTable: Dataset[ReplicaState] = replicas.table.as[ReplicaState]
+  def replicaTable: Dataset[ReplicaState] = replicas.table().as[ReplicaState]
 
   /** The snapshot-done callback (`HDFSSnapshotProcessor.java:234-286`):
     * validates the file + replica records and the snapshot tx, flips

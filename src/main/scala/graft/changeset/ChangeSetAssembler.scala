@@ -1,5 +1,6 @@
 package graft.changeset
 
+import graft.sources.{HadoopConfShip, SinkFileSystem}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -64,17 +65,17 @@ object ChangeSetAssembler {
 
   /** Write sliced deltas as block-replica files:
     * `<targetDir>/<escaped file path>/<blockId>-<prevBlockId>.blk`.
-    * Distributed foreachPartition write through Hadoop FS. */
+    * Distributed foreachPartition write through Hadoop FS, with the
+    * session's Hadoop conf shipped to the executors. */
   def writeReplicas(deltas: DataFrame, targetDir: String): Unit = {
     val iPath = deltas.schema.fieldIndex("path")
     val iBlock = deltas.schema.fieldIndex("blockId")
     val iPrev = deltas.schema.fieldIndex("prevBlockId")
     val iDelta = deltas.schema.fieldIndex("delta")
+    val conf = HadoopConfShip.capture(deltas.sparkSession)
     deltas.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          java.net.URI.create(targetDir),
-          new org.apache.hadoop.conf.Configuration())
+        val fs = SinkFileSystem.get(targetDir, conf.value)
         it.foreach { r =>
           val bytes = r.getAs[Array[Byte]](iDelta)
           // deleted/empty blocks write no replica — the tombstone rides

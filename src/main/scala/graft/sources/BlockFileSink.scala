@@ -3,8 +3,7 @@ package graft.sources
 import java.util
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -80,13 +79,13 @@ private class BlockSinkTable(path: String) extends Table with SupportsWrite {
   * credentials, custom scheme impls, and kerberos settings set through
   * spark.hadoop.* reach the writer/reader (a fresh
   * `new Configuration()` would silently drop them). */
-private[sources] object HadoopConfShip {
+private[graft] object HadoopConfShip {
   type Shipped = org.apache.spark.util.SerializableConfiguration
 
-  def capture(): Shipped =
+  def capture(spark: org.apache.spark.sql.SparkSession =
+      org.apache.spark.sql.SparkSession.active): Shipped =
     new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration)
+      spark.sparkContext.hadoopConfiguration)
 }
 
 private case class BlockFilesCommitted(files: Seq[String])
@@ -113,7 +112,7 @@ private class BlockSinkBatchWrite(path: String, writeId: String,
     if (dupes.nonEmpty)
       throw new IllegalStateException(
         s"duplicate block files within one write: ${dupes.mkString(", ")}")
-    val fs = FileSystem.get(java.net.URI.create(path), conf.value)
+    val fs = SinkFileSystem.get(path, conf.value)
     val target = new Path(path)
     fs.mkdirs(target)
     // publish exactly the committed attempts' files; anything else in
@@ -137,7 +136,7 @@ private class BlockSinkBatchWrite(path: String, writeId: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(java.net.URI.create(path), conf.value)
+    val fs = SinkFileSystem.get(path, conf.value)
     fs.delete(new Path(new Path(new Path(path), "_tmp"), writeId), true)
     try fs.delete(new Path(new Path(path), "_tmp"), false) catch { case _: java.io.IOException => () }
   }
@@ -157,7 +156,7 @@ private class BlockSinkWriter(path: String, writeId: String,
   private val attemptDir = new Path(
     new Path(new Path(path, "_tmp"), writeId), UUID.randomUUID().toString)
   private lazy val fs = {
-    val f = FileSystem.get(java.net.URI.create(path), conf.value)
+    val f = SinkFileSystem.get(path, conf.value)
     f.mkdirs(attemptDir)
     f
   }

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,5 +91,48 @@ class BlockFileSinkSpec extends AnyFunSuite {
         .map(_.getName).filterNot(_.startsWith("."))
     assert(leftover.isEmpty,
       s"partial output escaped the failed job: ${leftover.mkString(",")}")
+  }
+
+  test("published files carry Hadoop's create mode and a verified .crc sidecar") {
+    val tmp = Files.createTempDirectory("graft_bsink_").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val umaskKey = "fs.permissions.umask-mode"
+    val saved = conf.get(umaskKey)
+    // a umask unlike the process's, so the mode can only come from Hadoop
+    conf.set(umaskKey, "027")
+    val want = FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf))
+    try {
+      rows(6).repartition(2).write.format(fmt).mode("append").save(s"$tmp/out")
+      import spark.implicits._
+      graft.changeset.ChangeSetAssembler.writeReplicas(
+        Seq(("/data/r.parquet", 41L, -1L, "replica-41".getBytes("UTF-8")))
+          .toDF("path", "blockId", "prevBlockId", "delta"), s"$tmp/replicas")
+    } finally if (saved == null) conf.unset(umaskKey) else conf.set(umaskKey, saved)
+    assert(want.toString == "rw-r-----")
+
+    val blks = (new java.io.File(s"$tmp/out").listFiles() ++
+      new java.io.File(s"$tmp/replicas/data_r.parquet").listFiles())
+      .filter(_.getName.endsWith(".blk")).sortBy(_.getName)
+    assert(blks.length == 7)
+    val local = FileSystem.get(java.net.URI.create("file:///"), conf)
+    blks.foreach { f =>
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f.toPath))
+        == want.toString, f.getName)
+      assert(new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile, f.getName)
+      val in = local.open(new Path(f.toURI))
+      val got = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+      assert(got.sameElements(Files.readAllBytes(f.toPath)) &&
+        new String(got, "UTF-8").matches("(payload|replica)-\\d+"), f.getName)
+    }
+    // the sidecar is a real checksum of the bytes: flip one and the
+    // checksummed read refuses
+    val victim = blks.head.toPath
+    val bytes = Files.readAllBytes(victim)
+    bytes(0) = (bytes(0) ^ 1).toByte
+    Files.write(victim, bytes)
+    intercept[ChecksumException] {
+      val in = local.open(new Path(victim.toUri))
+      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    }
   }
 }
