@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.util.RawValue
+
 /** Driver-run benchmark: times every registered query at the SF dir in
   * `SPARK_GRAFT_SF_DIR`, one JSON line on stdout. A failing query is
   * REPORTED (name → error in `"errors"`, and the process exits nonzero)
@@ -8,10 +10,36 @@ object Bench {
   /** The scale-factor directory timed: `SPARK_GRAFT_SF_DIR`, else sf0.1. */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** The bench record as one JSON line: total, per-query seconds keyed
+    * by `key(name)`, errors by full name, warmup and SF dir.
+    *
+    * ms precision: the driver's tail capture truncates long lines from
+    * the left, and full double precision nearly doubles the line length
+    * for no information (these are wall-clock seconds). BENCH_full.json
+    * keeps the same rounded values — one record, two homes. The stdout
+    * line keys queries by the unique qNN prefix: at 134 queries the
+    * full-name line is ~4 KB, which past rounds showed exceeds the
+    * driver's capture window (BENCH_r04/r05 both landed `"parsed": null`
+    * with the head of the line cut off). The prefix keeps every number
+    * attributable (full names in BENCH_full.json / README) at ~14 B/entry. */
+  private[graft] def record(results: Seq[(String, Double, Option[String])],
+      warmupSec: Double, sf: String, key: String => String): String = {
+    // number text is `%.3f`, written raw so it is the same digits
+    // whatever Jackson would make of a double
+    def sec3(v: Double) = new RawValue(f"$v%.3f")
+    val r = util.Json.mapper.createObjectNode()
+      .put("metric", "total").putRawValue("value", sec3(results.map(_._2).sum))
+      .put("unit", "sec").put("n_queries", results.size)
+    val qs = r.putObject("queries")
+    results.foreach { case (k, v, _) => qs.putRawValue(key(k), sec3(v)) }
+    val errs = r.putObject("errors")
+    results.foreach { case (k, _, e) => e.foreach(errs.put(k, _)) }
+    r.putRawValue("warmup_sec", sec3(warmupSec)).put("sf", sf)
+    util.Json.mapper.writeValueAsString(r)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
-    def esc(s: String): String = // strip ALL JSON-illegal chars
-      s.replaceAll("[\\\\\"\\p{Cntrl}]", " ").take(300)
     // Untimed warmup: run every query once at the smallest SF so the
     // timed pass measures the operators, not one-time JVM/session costs
     // (JIT, codegen + Janino caches, parquet/RocksDB class loading) that
@@ -36,40 +64,21 @@ object Bench {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       val err = try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(esc(e.toString)) }
+        catch { case e: Throwable => Some(e.toString.take(300)) }
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $name $sec%.2f")
       spark.sparkContext.setJobDescription(null)
       (name, sec, err)
     }
-    // ms precision on stdout: the driver's tail capture truncates long
-    // lines from the left, and full double precision nearly doubles the
-    // line length for no information (these are wall-clock seconds).
-    // BENCH_full.json keeps the same rounded values — one record, two homes.
-    // stdout keys are shortened to the unique qNN prefix: at 134 queries
-    // the full-name line is ~4 KB, which past rounds showed exceeds the
-    // driver's capture window (BENCH_r04/r05 both landed `"parsed": null`
-    // with the head of the line cut off). The prefix keeps every number
-    // attributable (full names in BENCH_full.json / README) at ~14 B/entry.
-    val qs = results.map { case (k, v, _) =>
-      f""""${k.takeWhile(_ != '_')}":$v%.3f"""
-    }.mkString("{", ",", "}")
-    val qsFull = results.map { case (k, v, _) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => s"\"$k\":\"$e\"" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    def record(q: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$q,"errors":$errs,"warmup_sec":$warmupSec%.3f,"sf":"$sfDir"}"""
-    val line = record(qs)
+    val line = record(results, warmupSec, sfDir, _.takeWhile(_ != '_'))
     // Persist the full record to a file: the driver's stdout capture
     // has truncated long lines from the LEFT in past rounds (BENCH_r04
     // lost q01-q29), and a file survives whole. Path overridable so a
     // wrapper can point it at the round artifact directly.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outFile), record(qsFull) + "\n")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
+        record(results, warmupSec, sfDir, identity) + "\n")
       System.err.println(s"[bench] full record written to $outFile")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")

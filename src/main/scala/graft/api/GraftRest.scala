@@ -1,16 +1,21 @@
 package graft.api
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.filters.DomainFilters.Filter
+import graft.util.Json
+import scala.jdk.CollectionConverters._
 
 /** REST layer over the [[Graft]] facade — the rebuild of the
   * reference's Spring service surface (SURVEY §2.12;
   * `svc/namenode/SnapshotService.java:26-135`,
   * `svc/namenode/EditsLogReaderService.java:21-45`) on the JDK's own
-  * `com.sun.net.httpserver` (Java SE, zero added dependencies — the
-  * reference's Spring Boot stack existed only to host these thin
-  * wrappers). Routes mirror the reference's verbs over the operations
-  * the facade exposes:
+  * `com.sun.net.httpserver`, with bodies read and written by Jackson
+  * (Jackson ships with Spark — the reference's Spring Boot stack
+  * existed only to host these thin wrappers). Routes mirror the
+  * reference's verbs over the operations the facade exposes:
   *
   *  - `PUT    /snapshot/filters/add/{domain}` — body
   *    `{"entity","dir","regex","priority"}` (SnapshotService `addFilter`)
@@ -41,6 +46,12 @@ import graft.filters.DomainFilters.Filter
   *    `start` took its ConfigSource the same way); 409 if running
   *  - `POST   /editslog/stop` — halts it (EditsLogReaderService `stop`)
   *
+  * Request fields are typed: a present field of the wrong JSON type
+  * (a string where an integer belongs, a non-integral number, an
+  * integer that does not fit a Long) answers 400 rather than falling
+  * back to a default; an explicit `null` counts as absent. Malformed
+  * JSON, including tokens after the body's value, answers 400.
+  *
   * Handlers run driver-side and call straight into Spark jobs, like
   * the reference's controllers called straight into its processors.
   * The admin verbs control DRIVER-SIDE service state (registry epoch,
@@ -49,6 +60,7 @@ import graft.filters.DomainFilters.Filter
   * records for distributed locks.
   */
 final class GraftRest(graft: Graft, port: Int = 0) {
+  import GraftRest._
 
   private val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
 
@@ -75,131 +87,107 @@ final class GraftRest(graft: Graft, port: Int = 0) {
           val rest = p.stripPrefix("/snapshot/filters/add/")
           if (rest.endsWith("/batch")) {
             val domain = rest.stripSuffix("/batch")
-            val fs = JsonLite.parseArray(body(ex)).map(o => toFilter(domain, o))
+            val fs = parseArray(body(ex)).map(o => toFilter(domain, o))
             fs.foreach(graft.addFilter)
-            respond(ex, 200, filtersJson(graft.filters))
-          } else {
-            graft.addFilter(toFilter(rest, JsonLite.parseObject(body(ex))))
-            respond(ex, 200, filtersJson(graft.filters))
-          }
+          } else graft.addFilter(toFilter(rest, parseObject(body(ex))))
+          respond(ex, 200, filtersJson(graft.filters))
         case ("DELETE", p) if p.startsWith("/snapshot/filters/remove/") =>
           p.stripPrefix("/snapshot/filters/remove/").split('/') match {
             case Array(domain, entity) =>
               graft.removeFilter(domain, entity)
               respond(ex, 200, filtersJson(graft.filters))
             case _ => respond(ex, 400,
-              """{"error":"expected /snapshot/filters/remove/{domain}/{entity}"}""")
+              error("expected /snapshot/filters/remove/{domain}/{entity}"))
           }
         case ("GET", "/snapshot/filters") =>
           respond(ex, 200, filtersJson(graft.filters))
         case ("POST", "/snapshot/run") =>
           val b = body(ex)
-          val asOf =
-            if (b.trim.isEmpty) graft.watermark()
-            else JsonLite.parseObject(b).get("asOfTxId") match {
-              case Some(n: Long) => n
-              case _ => graft.watermark()
-            }
+          val asOf = (if (b.trim.isEmpty) None
+            else long(parseObject(b), "asOfTxId")).getOrElse(graft.watermark())
           val n = graft.snapshot(asOf).count()
-          respond(ex, 200, s"""{"asOfTxId":$asOf,"count":$n}""")
+          respond(ex, 200, obj().put("asOfTxId", asOf).put("count", n))
         case ("GET", "/snapshot/status") =>
           // bounded collect: one row per registered entity (registry-sized)
-          val rows = graft.snapshotStatus().collect().map { r =>
-            s"""{"domain":${JsonLite.quote(r.getString(0))},""" +
-              s""""entity":${JsonLite.quote(r.getString(1))},""" +
-              s""""n_files":${r.getLong(2)},"max_txid":${r.getLong(3)}}"""
+          val rows = arr()
+          graft.snapshotStatus().collect().foreach { r =>
+            rows.addObject().put("domain", r.getString(0))
+              .put("entity", r.getString(1))
+              .put("n_files", r.getLong(2)).put("max_txid", r.getLong(3))
           }
-          respond(ex, 200, rows.mkString("[", ",", "]"))
+          respond(ex, 200, rows)
         case ("POST", "/snapshot/done") =>
-          val o = JsonLite.parseObject(body(ex))
-          val path = o.get("hdfsPath") match {
-            case Some(p: String) => p
-            case _ => throw new IllegalArgumentException(
-              "missing field 'hdfsPath'")
-          }
-          val tx = o.get("transactionId") match {
-            case Some(n: Long) => n
-            case _ => throw new IllegalArgumentException(
-              "missing field 'transactionId'")
-          }
-          val r = graft.snapshotDone(path, tx)
+          val o = parseObject(body(ex))
+          val r = graft.snapshotDone(required(o, "hdfsPath", str),
+            required(o, "transactionId", long))
           respond(ex, 200, snapshotDoneJson(r))
         case ("POST", "/admin/snapshot/start") =>
           val n = graft.snapshotStart()
-          respond(ex, 200, s"""{"state":"Running","registered":$n}""")
+          respond(ex, 200, obj().put("state", "Running").put("registered", n))
         case ("POST", "/admin/snapshot/stop") =>
           graft.snapshotStop()
-          respond(ex, 200, """{"state":"Disposed"}""")
+          respond(ex, 200, obj().put("state", "Disposed"))
         case ("POST", "/editslog/start") =>
-          val o = JsonLite.parseObject(body(ex))
-          def str(k: String): String = o.get(k) match {
-            case Some(v: String) => v
-            case _ => throw new IllegalArgumentException(s"missing field '$k'")
-          }
-          graft.editslogStart(str("inDir"), str("outDir"), str("checkpoint"))
-          respond(ex, 200, """{"state":"Running"}""")
+          val o = parseObject(body(ex))
+          graft.editslogStart(required(o, "inDir", str),
+            required(o, "outDir", str), required(o, "checkpoint", str))
+          respond(ex, 200, obj().put("state", "Running"))
         case ("POST", "/editslog/stop") =>
           val stopped = graft.editslogStop()
           respond(ex, 200,
-            s"""{"state":"${if (stopped) "Stopped" else "NotRunning"}"}""")
+            obj().put("state", if (stopped) "Stopped" else "NotRunning"))
         case ("GET", "/editslog/status") =>
-          respond(ex, 200,
-            s"""{"watermark":${graft.watermark()},""" +
-              s""""running":${graft.editslogRunning},""" +
-              s""""versions":${graft.versions().mkString("[", ",", "]")}}""")
-        case _ =>
-          // quote: the decoded path can carry quotes/control chars and
-          // must not break the JSON error contract
-          respond(ex, 404,
-            s"""{"error":${JsonLite.quote(s"no route for $method $path")}}""")
+          val o = obj().put("watermark", graft.watermark())
+            .put("running", graft.editslogRunning)
+          val vs = o.putArray("versions")
+          graft.versions().foreach(v => vs.add(v))
+          respond(ex, 200, o)
+        case _ => respond(ex, 404, error(s"no route for $method $path"))
       }
     } catch {
-      case e: Graft.NotFound =>
-        respond(ex, 404, s"""{"error":${JsonLite.quote(e.getMessage)}}""")
-      case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":${JsonLite.quote(e.getMessage)}}""")
+      case e: Graft.NotFound => respond(ex, 404, error(e.getMessage))
+      case e: IllegalArgumentException => respond(ex, 400, error(e.getMessage))
+      case e: JsonProcessingException =>
+        respond(ex, 400, error(e.getOriginalMessage))
       case e: Graft.Conflict => // service lifecycle conflicts, and only those
-        respond(ex, 409, s"""{"error":${JsonLite.quote(e.getMessage)}}""")
-      case e: Throwable =>
-        respond(ex, 500, s"""{"error":${JsonLite.quote(String.valueOf(e))}}""")
+        respond(ex, 409, error(e.getMessage))
+      case e: Throwable => respond(ex, 500, error(String.valueOf(e)))
     }
   }
 
-  private def snapshotDoneJson(r: Graft.SnapshotDone): String =
-    s"""{"inode":${r.replica.inode},""" +
-      s""""path":${JsonLite.quote(r.replica.path)},""" +
-      s""""snapshotTxId":${r.replica.snapshotTxId},""" +
-      s""""lastReplicatedTx":${r.replica.lastReplicatedTx},""" +
-      s""""snapshotReady":${r.replica.snapshotReady},""" +
-      s""""backlogEmitted":${r.backlogEmitted},""" +
-      s""""duplicate":${r.duplicate}}"""
+  private def snapshotDoneJson(r: Graft.SnapshotDone): ObjectNode =
+    obj().put("inode", r.replica.inode)
+      .put("path", r.replica.path)
+      .put("snapshotTxId", r.replica.snapshotTxId)
+      .put("lastReplicatedTx", r.replica.lastReplicatedTx)
+      .put("snapshotReady", r.replica.snapshotReady)
+      .put("backlogEmitted", r.backlogEmitted)
+      .put("duplicate", r.duplicate)
 
-  private def toFilter(domain: String, o: Map[String, Any]): Filter = {
-    def str(k: String): String = o.get(k) match {
-      case Some(s: String) => s
-      case _ => throw new IllegalArgumentException(s"missing field '$k'")
+  private def toFilter(domain: String, o: ObjectNode): Filter = {
+    val prio = long(o, "priority").fold(0) { p =>
+      if (!p.isValidInt) throw new IllegalArgumentException(
+        s"field 'priority' out of range: $p")
+      p.toInt
     }
-    val prio = o.get("priority") match {
-      case Some(n: Long) => n.toInt
-      case _ => 0
-    }
-    Filter(domain, str("entity"), str("dir"), str("regex"), prio)
+    Filter(domain, required(o, "entity", str), required(o, "dir", str),
+      required(o, "regex", str), prio)
   }
 
-  private def filtersJson(fs: Seq[Filter]): String =
-    fs.map(f => s"""{"domain":${JsonLite.quote(f.domain)},""" +
-        s""""entity":${JsonLite.quote(f.entity)},""" +
-        s""""dir":${JsonLite.quote(f.dir)},""" +
-        s""""regex":${JsonLite.quote(f.regex)},""" +
-        s""""priority":${f.priority}}""")
-      .mkString("[", ",", "]")
+  private def filtersJson(fs: Seq[Filter]): ArrayNode = {
+    val out = arr()
+    fs.foreach(f => out.addObject().put("domain", f.domain)
+      .put("entity", f.entity).put("dir", f.dir).put("regex", f.regex)
+      .put("priority", f.priority))
+    out
+  }
 
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8)
 
-  private def respond(ex: HttpExchange, code: Int, json: String): Unit = {
-    val bytes = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private def respond(ex: HttpExchange, code: Int, json: JsonNode): Unit = {
+    val bytes = Json.mapper.writeValueAsBytes(json)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val os = ex.getResponseBody
@@ -207,130 +195,52 @@ final class GraftRest(graft: Graft, port: Int = 0) {
   }
 }
 
-/** Minimal JSON reader for the flat bodies this surface accepts
-  * (objects of string/integer fields, and arrays of such objects) —
-  * enough for the reference's request shapes without adding a
-  * dependency. Throws IllegalArgumentException (→ 400) on malformed
-  * input. */
-private[api] object JsonLite {
+/** Response nodes and typed access to request bodies. Malformed JSON
+  * throws Jackson's JsonProcessingException and a shape or type
+  * mismatch throws IllegalArgumentException; the handler answers 400
+  * for both. */
+private object GraftRest {
+  private def obj(): ObjectNode = Json.mapper.createObjectNode()
+  private def arr(): ArrayNode = Json.mapper.createArrayNode()
+  private def error(msg: String): ObjectNode = obj().put("error", msg)
 
-  def quote(s: String): String =
-    "\"" + String.valueOf(s).flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  def parseObject(s: String): Map[String, Any] = {
-    val p = new P(s)
-    p.ws()
-    val m = p.obj()
-    p.ws()
-    require(p.eof, "trailing characters after JSON object")
-    m
+  private def parseObject(s: String): ObjectNode = Json.mapper.readTree(s) match {
+    case o: ObjectNode => o
+    case _ => throw new IllegalArgumentException("expected a JSON object")
   }
 
-  def parseArray(s: String): Seq[Map[String, Any]] = {
-    val p = new P(s)
-    p.ws()
-    p.expect('[')
-    val out = Seq.newBuilder[Map[String, Any]]
-    p.ws()
-    if (!p.peekIs(']')) {
-      var more = true
-      while (more) {
-        p.ws(); out += p.obj(); p.ws()
-        if (p.peekIs(',')) { p.next(); () } else more = false
-      }
+  private def parseArray(s: String): Seq[ObjectNode] = Json.mapper.readTree(s) match {
+    case a: ArrayNode => a.elements().asScala.toSeq.map {
+      case o: ObjectNode => o
+      case _ => throw new IllegalArgumentException(
+        "expected a JSON array of objects")
     }
-    p.expect(']')
-    out.result()
+    case _ => throw new IllegalArgumentException("expected a JSON array")
   }
 
-  private final class P(s: String) {
-    private var i = 0
-    def eof: Boolean = i >= s.length
-    def peekIs(c: Char): Boolean = !eof && s.charAt(i) == c
-    def next(): Char = { val c = s.charAt(i); i += 1; c }
-    def ws(): Unit = while (!eof && s.charAt(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      require(!eof && s.charAt(i) == c, s"expected '$c' at offset $i")
-      i += 1
+  /** The field `k`, or None when absent or null; a present value of any
+    * other type than a string is rejected. */
+  private def str(o: ObjectNode, k: String): Option[String] =
+    field(o, k).map { v =>
+      if (!v.isTextual) throw new IllegalArgumentException(
+        s"field '$k' must be a string")
+      v.textValue
     }
-    def obj(): Map[String, Any] = {
-      expect('{'); ws()
-      val m = Map.newBuilder[String, Any]
-      if (!peekIs('}')) {
-        var more = true
-        while (more) {
-          ws()
-          val k = str()
-          ws(); expect(':'); ws()
-          m += (k -> value())
-          ws()
-          if (peekIs(',')) { next(); () } else more = false
-        }
-      }
-      expect('}')
-      m.result()
+
+  /** The field `k`, or None when absent or null; a present value must be
+    * an integral number that fits a Long. */
+  private def long(o: ObjectNode, k: String): Option[Long] =
+    field(o, k).map { v =>
+      if (!v.isIntegralNumber || !v.canConvertToLong)
+        throw new IllegalArgumentException(
+          s"field '$k' must be an integer that fits a Long")
+      v.longValue
     }
-    def value(): Any = {
-      require(!eof, "unexpected end of JSON")
-      s.charAt(i) match {
-        case '"' => str()
-        case c if c == '-' || c.isDigit => num()
-        case 't' => lit("true", true)
-        case 'f' => lit("false", false)
-        case 'n' => lit("null", null)
-        case c => throw new IllegalArgumentException(
-          s"unsupported JSON value starting with '$c' at offset $i")
-      }
-    }
-    private def lit(word: String, v: Any): Any = {
-      require(s.regionMatches(i, word, 0, word.length), s"bad literal at $i")
-      i += word.length; v
-    }
-    def str(): String = {
-      expect('"')
-      val b = new StringBuilder
-      var done = false
-      while (!done) {
-        require(!eof, "unterminated string")
-        next() match {
-          case '"' => done = true
-          case '\\' =>
-            require(!eof, "unterminated escape")
-            next() match {
-              case '"' => b += '"'
-              case '\\' => b += '\\'
-              case '/' => b += '/'
-              case 'n' => b += '\n'
-              case 'r' => b += '\r'
-              case 't' => b += '\t'
-              case 'b' => b += '\b'
-              case 'f' => b += '\f'
-              case 'u' =>
-                require(i + 4 <= s.length, "bad unicode escape")
-                b += Integer.parseInt(s.substring(i, i + 4), 16).toChar
-                i += 4
-              case c => throw new IllegalArgumentException(s"bad escape \\$c")
-            }
-          case c => b += c
-        }
-      }
-      b.toString
-    }
-    def num(): Long = {
-      val start = i
-      if (peekIs('-')) { next(); () }
-      while (!eof && s.charAt(i).isDigit) i += 1
-      require(i > start + (if (s.charAt(start) == '-') 1 else 0),
-        s"bad number at offset $start")
-      s.substring(start, i).toLong
-    }
-  }
+
+  private def field(o: ObjectNode, k: String): Option[JsonNode] =
+    Option(o.get(k)).filterNot(_.isNull)
+
+  private def required[T](o: ObjectNode, k: String,
+      get: (ObjectNode, String) => Option[T]): T =
+    get(o, k).getOrElse(throw new IllegalArgumentException(s"missing field '$k'"))
 }

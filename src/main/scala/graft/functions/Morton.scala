@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** N-dimensional Morton (Z-order) key as a plain Column builder — the
-  * bit-interleave space-filling curve `Graft.writeClusteredLayout`
-  * clusters on for N > 2 dims (2-D keeps the native Hilbert expression,
+  * bit-interleave space-filling curve
+  * `ClusteredLayout.writeClusteredLayout` clusters on for N > 2 dims (2-D keeps the native Hilbert expression,
   * whose boxes are tighter; past ~4 dims per-dim RESOLUTION dominates
   * skipping quality, so interleave is the right cost point). Bit b of
   * dim i lands at position `b*N + i`; the unrolled shift/and/or terms

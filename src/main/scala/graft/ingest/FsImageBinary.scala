@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.ingest.FsImageBootstrap.{Edge, INode}
 import graft.model.FileState
+import graft.util.ProtoWire.Reader
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Binary (protobuf) FSImage loader (SURVEY §2.1 S4) — reads the
@@ -37,75 +38,48 @@ object FsImageBinary {
   final case class Summary(layoutVersion: Long, txId: Long,
       numInodes: Long, inodes: Seq[INode], edges: Seq[Edge])
 
-  /** Minimal protobuf wire reader (varint / fixed64 / length-delim). */
-  private final class PB(val b: Array[Byte], var o: Int, val end: Int) {
-    def hasMore: Boolean = o < end
-    def varint(): Long = {
-      var shift = 0; var v = 0L
-      while ({ val x = b(o); o += 1; v |= (x & 0x7fL) << shift
-        shift += 7; (x & 0x80) != 0 }) ()
-      v
-    }
-    def fixed64(): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(o) & 0xffL) << (8 * i); o += 1; i += 1 }
-      v
-    }
-    def bytes(): Array[Byte] = {
-      val n = varint().toInt; val v = java.util.Arrays.copyOfRange(b, o, o + n)
-      o += n; v
-    }
-    /** (fieldNumber, wireType) of the next tag. */
-    def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 1 => o += 8
-      // two statements, NOT `o += varint().toInt`: compound assignment
-      // reads the OLD o before varint() advances it, landing the skip
-      // short by the length-prefix bytes
-      case 2 => val n = varint().toInt; o += n
-      case 5 => o += 4
-      case w => throw new IllegalArgumentException(s"wire type $w")
-    }
-    def sub(): PB = { val n = varint().toInt; val p = new PB(b, o, o + n); o += n; p }
-  }
-
   private val Magic = "HDFSIMG1".getBytes("UTF-8")
 
-  /** Parse one image file. Pure — runs inside a decode task. */
+  /** Parse one image file. Pure — runs inside a decode task. Reads go
+    * through the bounds-checked [[ProtoWire.Reader]], and the summary
+    * and every section are checked to lie inside the image before they
+    * are read, so a corrupt image throws IllegalArgumentException. */
   def parseImage(bytes: Array[Byte]): Summary = {
     require(bytes.length > 12 && Magic.indices.forall(i => bytes(i) == Magic(i)),
       "not an HDFS protobuf fsimage (missing HDFSIMG1 magic)")
-    val sumLen = ((bytes(bytes.length - 4) & 0xff) << 24) |
+    val sumLen = ((bytes(bytes.length - 4) & 0xffL) << 24) |
       ((bytes(bytes.length - 3) & 0xff) << 16) |
       ((bytes(bytes.length - 2) & 0xff) << 8) | (bytes(bytes.length - 1) & 0xff)
     val sumStart = bytes.length - 4 - sumLen
+    require(sumStart >= Magic.length,
+      s"malformed fsimage: summary length $sumLen runs past the file start")
     // FileSummary itself is a delimited message at sumStart
-    val sp = new PB(bytes, sumStart, bytes.length - 4)
-    val summary = sp.sub()
+    val summary = new Reader(bytes, sumStart.toInt, bytes.length - 4).sub()
     var layout = 0L
     var sections = Vector.empty[(String, Long, Long)]
     while (summary.hasMore) summary.tag() match {
       case (2, 0) => layout = summary.varint()
       case (3, 2) =>
-        val codec = new String(summary.bytes(), "UTF-8")
+        val codec = summary.strField()
         require(codec.isEmpty, s"compressed fsimage not supported: $codec")
       case (4, 2) =>
         val s = summary.sub()
         var name = ""; var len = 0L; var off = 0L
         while (s.hasMore) s.tag() match {
-          case (1, 2) => name = new String(s.bytes(), "UTF-8")
+          case (1, 2) => name = s.strField()
           case (2, 0) => len = s.varint()
           case (3, 0) => off = s.varint()
           case (_, w) => s.skip(w)
         }
+        // sections lie between the magic and the summary
+        require(off >= Magic.length && len >= 0 && len <= sumStart - off,
+          s"malformed fsimage: section $name [$off, +$len) outside the image")
         sections :+= ((name, len, off))
       case (_, w) => summary.skip(w)
     }
-    def section(name: String): Option[PB] =
+    def section(name: String): Option[Reader] =
       sections.find(_._1 == name).map { case (_, len, off) =>
-        new PB(bytes, off.toInt, (off + len).toInt)
+        new Reader(bytes, off.toInt, (off + len).toInt)
       }
 
     val txId = section("NS_INFO").map { p =>
@@ -134,7 +108,7 @@ object FsImageBinary {
         while (m.hasMore) m.tag() match {
           case (1, 0) => tpe = m.varint()
           case (2, 0) => id = m.varint()
-          case (3, 2) => name = new String(m.bytes(), "UTF-8")
+          case (3, 2) => name = m.strField()
           case (4, 2) => // INodeFile
             val f = m.sub()
             while (f.hasMore) f.tag() match {

@@ -739,8 +739,8 @@ object Layout {
   private val MCellShift = 4096L // key div 2^12 -> 4-bit/dim octree cells
 
   /** 3-D Morton layout audit: the EXACT scaling + interleave arithmetic
-    * `Graft.writeClusteredLayout` clusters on for N>2 (single authority
-    * `functions.Morton`), hash-gated against DuckDB — the N-dim
+    * `ClusteredLayout.writeClusteredLayout` clusters on for N>2 (single
+    * authority `functions.Morton`), hash-gated against DuckDB — the N-dim
     * analogue of q128's 2-D Z-order gate. Each dim is scaled to the
     * 8-bit grid with the writer's formula, the 24-bit key is cut into
     * 4-bit-per-dim octree cells (key div 4096), and each cell reports

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.{ChangeEvent, Mode, Op}
+import graft.util.ProtoWire.{Reader, Writer}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -13,8 +14,9 @@ import org.apache.spark.sql.functions.col
   * `ChangeDeltaSerDe.java:92` (`namespace:mode:txId:id` — the message
   * MODE travels in the id, not in the envelope).
   *
-  * Hand-rolled wire reader/writer in the [[graft.ingest.FsImageBinary]]
-  * style: no protobuf runtime on the classpath, only the public wire
+  * Reads and writes through [[graft.util.ProtoWire]], the same
+  * bounds-checked wire reader/writer [[graft.ingest.FsImageBinary]]
+  * uses: no protobuf runtime on the classpath, only the public wire
   * format (varint / length-delimited, field numbers from the .proto).
   * This is the piece that makes the rebuild DROP-IN compatible with an
   * existing hcdc deployment's Kafka topics: the bytes this codec writes
@@ -70,99 +72,22 @@ object ChangeDeltaCodec {
     case other => throw new IllegalArgumentException(s"unknown op $other")
   }
 
-  // ── minimal protobuf wire writer ────────────────────────────────────
-  // Fields are emitted in field-number order with required fields always
-  // present — byte-identical to protobuf-java's canonical serialization,
-  // which is what the round-trip/fixture specs pin.
-  private final class PBW {
-    private val buf = new java.io.ByteArrayOutputStream(64)
-    def varint(v: Long): Unit = {
-      var x = v
-      var continue = true
-      while (continue) {
-        val b = (x & 0x7f).toInt
-        x = x >>> 7
-        if (x != 0) buf.write(b | 0x80) else { buf.write(b); continue = false }
-      }
-    }
-    private def tag(field: Int, wire: Int): Unit =
-      varint((field.toLong << 3) | wire)
-    def int64(field: Int, v: Long): Unit = { tag(field, 0); varint(v) }
-    def bool(field: Int, v: Boolean): Unit = { tag(field, 0); varint(if (v) 1L else 0L) }
-    def str(field: Int, s: String): Unit =
-      bytes(field, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def bytes(field: Int, b: Array[Byte]): Unit = {
-      tag(field, 2); varint(b.length.toLong); buf.write(b, 0, b.length)
-    }
-    def msg(field: Int)(f: PBW => Unit): Unit = {
-      val w = new PBW; f(w); bytes(field, w.result)
-    }
-    def result: Array[Byte] = buf.toByteArray
-  }
-
-  // ── minimal protobuf wire reader ────────────────────────────────────
-  // Every read is BOUNDS-CHECKED against this message's `end`, so a
-  // corrupted length prefix in foreign topic bytes fails loudly instead
-  // of silently decoding bytes that belong to sibling fields into a
-  // plausible-looking event (this decoder's whole job is reading bytes
-  // someone else produced).
-  private final class PBR(b: Array[Byte], var o: Int, end: Int) {
-    def this(b: Array[Byte]) = this(b, 0, b.length)
-    def hasMore: Boolean = o < end
-    private def bounds(n: Int): Unit =
-      if (n < 0 || o + n > end) throw new IllegalArgumentException(
-        s"malformed protobuf: length $n exceeds message bound at offset $o")
-    def varint(): Long = {
-      var shift = 0; var v = 0L
-      while ({ bounds(1); val x = b(o); o += 1; v |= (x & 0x7fL) << shift
-        shift += 7; (x & 0x80) != 0 }) ()
-      v
-    }
-    def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
-    def strField(): String = {
-      val n = varint().toInt
-      bounds(n)
-      val s = new String(b, o, n, java.nio.charset.StandardCharsets.UTF_8)
-      o += n; s
-    }
-    def bytesField(): Array[Byte] = {
-      val n = varint().toInt
-      bounds(n)
-      val v = java.util.Arrays.copyOfRange(b, o, o + n); o += n; v
-    }
-    def sub(): PBR = {
-      val n = varint().toInt
-      bounds(n)
-      val p = new PBR(b, o, o + n); o += n; p
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 1 => bounds(8); o += 8
-      // two statements, NOT `o += varint().toInt`: compound assignment
-      // reads the OLD o before varint() advances it, landing the skip
-      // short by the length-prefix bytes
-      case 2 => val n = varint().toInt; bounds(n); o += n
-      case 5 => bounds(4); o += 4
-      case w => throw new IllegalArgumentException(s"wire type $w")
-    }
-  }
-
   // ── typed payload encode ────────────────────────────────────────────
 
   /** DFSTransaction {1: txId, 2: op enum, 3: timestamp}. */
-  private def writeTx(w: PBW, e: ChangeEvent): Unit = w.msg(1) { t =>
+  private def writeTx(w: Writer, e: ChangeEvent): Unit = w.msg(1) { t =>
     t.int64(1, e.txId); t.int64(2, opEnumOf(e.op).toLong); t.int64(3, e.ts)
   }
 
   /** DFSFile {2: path, 3: inodeId} — the proto has no field 1
     * (`data_block.proto:28-33`); inode ids are not part of the rebuild's
     * flat model, so 0 rides the required slot. */
-  private def writeFile(w: PBW, field: Int, path: String): Unit =
+  private def writeFile(w: Writer, field: Int, path: String): Unit =
     w.msg(field) { f => f.str(2, path); f.int64(3, 0L) }
 
   /** DFSBlock {1: blockId, 2: size, 3: blockSize, 4: genStamp,
     * 5: startOffset, 6: endOffset, 7: deltaSize?}. */
-  private def writeBlock(w: PBW, field: Int, blockId: Long, start: Long,
+  private def writeBlock(w: Writer, field: Int, blockId: Long, start: Long,
       end: Long, deltaSize: Long): Unit = w.msg(field) { b =>
     b.int64(1, blockId)
     b.int64(2, math.max(end, 0L))
@@ -176,7 +101,7 @@ object ChangeDeltaCodec {
   /** Serialize the typed payload message for one event (the envelope's
     * `body` bytes). */
   private[streaming] def encodeBody(e: ChangeEvent): Array[Byte] = {
-    val w = new PBW
+    val w = new Writer
     e.op match {
       case Op.AddFile | Op.CloseFile =>
         // DFSAddFile / DFSCloseFile share a layout (proto:46-55, 89-98)
@@ -246,7 +171,7 @@ object ChangeDeltaCodec {
     * clock — the one deliberate divergence from the reference's
     * `System.currentTimeMillis()`, for deterministic replay. */
   def encode(e: ChangeEvent, namespace: String): Array[Byte] = {
-    val w = new PBW
+    val w = new Writer
     w.str(1, namespace)
     w.str(2, e.txId.toString)
     w.str(3, keyOf(e))
@@ -261,7 +186,7 @@ object ChangeDeltaCodec {
   private final case class Blk(blockId: Long, start: Long, end: Long,
       deltaSize: Long)
 
-  private def readTx(p: PBR): (Long, Long) = { // (txId, ts)
+  private def readTx(p: Reader): (Long, Long) = { // (txId, ts)
     var tx = -1L; var ts = 0L
     while (p.hasMore) p.tag() match {
       case (1, 0) => tx = p.varint()
@@ -271,7 +196,7 @@ object ChangeDeltaCodec {
     (tx, ts)
   }
 
-  private def readFile(p: PBR): String = {
+  private def readFile(p: Reader): String = {
     var path = ""
     while (p.hasMore) p.tag() match {
       case (2, 2) => path = p.strField()
@@ -280,7 +205,7 @@ object ChangeDeltaCodec {
     path
   }
 
-  private def readBlock(p: PBR): Blk = {
+  private def readBlock(p: Reader): Blk = {
     var id = -1L; var start = -1L; var end = -1L; var delta = 0L
     while (p.hasMore) p.tag() match {
       case (1, 0) => id = p.varint()
@@ -306,7 +231,7 @@ object ChangeDeltaCodec {
     * faithful reader of reference-produced bytes (same field numbers,
     * same type dispatch). */
   def decode(envelope: Array[Byte], messageId: String = null): ChangeEvent = {
-    val p = new PBR(envelope)
+    val p = new Reader(envelope)
     var tpe = ""; var body: Array[Byte] = Array.emptyByteArray
     while (p.hasMore) p.tag() match {
       case (4, 2) => tpe = p.strField()
@@ -315,7 +240,7 @@ object ChangeDeltaCodec {
     }
     require(tpe.nonEmpty, "DFSChangeDelta missing required `type` (field 4)")
     val mode = modeOf(messageId)
-    val b = new PBR(body)
+    val b = new Reader(body)
     var tx = -1L; var ts = 0L
     var path = ""; var srcPath = ""
     var length = 0L

@@ -205,4 +205,89 @@ class GraftRestSpec extends AnyFunSuite {
       assert(c3 == 200 && b3.contains("NotRunning"))
     } finally rest.stop()
   }
+
+  test("a present field of the wrong type answers 400, never a default") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rest_types_").toString
+    val g = new Graft(spark, dir)
+    g.replay(Seq(ChangeEvent(1, Op.AddFile, "/data/movies/p1.parquet"),
+      ChangeEvent(2, Op.CloseFile, "/data/movies/p1.parquet")).toDS())
+    val rest = new GraftRest(g).start()
+    val base = s"http://localhost:${rest.boundPort}"
+    def run(b: String) = send("POST", s"$base/snapshot/run", b)
+    def put(b: String) = send("PUT", s"$base/snapshot/filters/add/d1", b)
+    val filter = """"entity":"M","dir":"/data/movies","regex":".*""""
+    try {
+      // a string tx is not the watermark, a fraction is not a tx, and an
+      // integer past Long range is not a wrapped Long
+      for (bad <- Seq(""""100"""", "100.5", "1e2", "99999999999999999999",
+          "true", "[100]", "{}")) {
+        val (c, b) = run(s"""{"asOfTxId":$bad}""")
+        assert(c == 400 && b.contains("asOfTxId"), s"$bad -> $c $b")
+      }
+      // the well-typed forms still work: a tx, an explicit null and no
+      // field at all (both of the latter mean the watermark)
+      val want = g.snapshot(100L).count()
+      assert(run("""{"asOfTxId":100}""") ==
+        ((200, s"""{"asOfTxId":100,"count":$want}""")))
+      val wm = g.watermark()
+      assert(run("""{"asOfTxId":null}""")._2.startsWith(s"""{"asOfTxId":$wm,"""))
+      assert(run("{}")._2.startsWith(s"""{"asOfTxId":$wm,"""))
+
+      for (bad <- Seq(""""2"""", "2.5", "4294967296")) {
+        val (c, b) = put(s"""{$filter,"priority":$bad}""")
+        assert(c == 400 && b.contains("priority"), s"$bad -> $c $b")
+      }
+      for (k <- Seq("entity", "dir", "regex")) {
+        val (c, b) = put(s"""{$filter,"$k":7}""")
+        assert(c == 400 && b.contains(s"'$k'"), s"$k -> $c $b")
+      }
+      assert(send("POST", s"$base/snapshot/done",
+        """{"hdfsPath":"/data/movies/p1.parquet","transactionId":"2"}""")._1 == 400)
+      // nothing rejected reached the registry
+      assert(g.filters.isEmpty)
+      assert(put(s"""{$filter,"priority":2}""")._1 == 200)
+      assert(g.filters.map(_.priority) == Seq(2))
+    } finally rest.stop()
+  }
+
+  test("JSON contract: malformed shapes answer 400, text round-trips exactly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rest_json_").toString
+    val g = new Graft(spark, dir)
+    val rest = new GraftRest(g).start()
+    val base = s"http://localhost:${rest.boundPort}"
+    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+    val filter = """{"entity":"M","dir":"/d","regex":".*"}"""
+    try {
+      // trailing tokens after the object
+      assert(send("PUT", s"$base/snapshot/filters/add/d1", s"$filter x")._1 == 400)
+      assert(send("PUT", s"$base/snapshot/filters/add/d1", s"$filter {}")._1 == 400)
+      // an empty body where an object is required
+      assert(send("POST", s"$base/snapshot/done", "")._1 == 400)
+      // an array where an object is expected, an object where /batch
+      // expects an array, and an array of non-objects
+      assert(send("PUT", s"$base/snapshot/filters/add/d1", s"[$filter]")._1 == 400)
+      assert(send("PUT", s"$base/snapshot/filters/add/d1/batch", filter)._1 == 400)
+      assert(send("PUT", s"$base/snapshot/filters/add/d1/batch", "[1]")._1 == 400)
+      assert(g.filters.isEmpty)
+
+      // an error message with a quote, a backslash, a newline and U+0001
+      // (all reach it through the percent-decoded route) parses back
+      val (c404, b404) = send("GET", s"$base/nope%22%5C%0A%01")
+      assert(c404 == 404)
+      assert(mapper.readTree(b404).get("error").textValue ==
+        "no route for GET /nope\"\\\n\u0001")
+
+      // a non-ASCII regex round-trips through the registry
+      val regex = "caf\u00e9/.*\\.parquet$"
+      val (c1, _) = send("PUT", s"$base/snapshot/filters/add/d1",
+        mapper.writeValueAsString(mapper.createObjectNode()
+          .put("entity", "E").put("dir", "/d").put("regex", regex)))
+      assert(c1 == 200)
+      val (c2, b2) = send("GET", s"$base/snapshot/filters")
+      assert(c2 == 200)
+      assert(mapper.readTree(b2).get(0).get("regex").textValue == regex)
+      assert(g.filters.map(_.regex) == Seq(regex))
+    } finally rest.stop()
+  }
 }

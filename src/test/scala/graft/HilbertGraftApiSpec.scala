@@ -1,12 +1,13 @@
 package graft
 
+import graft.ops.tableops.ClusteredLayout
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The q284/q287 layout device as a USER-CALLABLE operator (round-10
-  * verdict ask #7): `Graft.writeHilbertLayout` materializes a
-  * Hilbert-clustered table version + zone-map manifest, and
-  * `Graft.hilbertRectangleScan` proves measured files-read reduction
+  * verdict ask #7): `ClusteredLayout.writeClusteredLayout` materializes
+  * a Hilbert-clustered table version + zone-map manifest, and
+  * `ClusteredLayout.hilbertScan` proves measured files-read reduction
   * with exact results. */
 class HilbertGraftApiSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -20,13 +21,14 @@ class HilbertGraftApiSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "pk", "sk")
 
-    api.Graft.writeHilbertLayout(df, "pk", "sk", s"$tmp/layout", files = 64)
+    ClusteredLayout.writeClusteredLayout(df, Seq("pk", "sk"), s"$tmp/layout",
+      files = 64)
 
     // q287's rectangle: 20-30% x 40-60% of each domain
     val (xLo, xHi) = (400L, 600L)
     val (yLo, yHi) = (320L, 480L)
-    val (result, read, total) = api.Graft.hilbertRectangleScan(
-      spark, s"$tmp/layout", "pk", xLo, xHi, "sk", yLo, yHi)
+    val (result, read, total) = ClusteredLayout.hilbertScan(
+      spark, s"$tmp/layout", Seq(("pk", xLo, xHi), ("sk", yLo, yHi)))
 
     // exactness: the pruned scan returns precisely the filtered rows
     val expected = df.filter(col("pk").between(xLo, xHi) &&
@@ -52,15 +54,15 @@ class HilbertGraftApiSpec extends AnyFunSuite {
       .agg(min(col("pk")).as("pk_min"), max(col("pk")).as("pk_max"),
         min(col("sk")).as("sk_min"), max(col("sk")).as("sk_max"))
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/control/zonemap")
-    val (_, readCtl, totalCtl) = api.Graft.hilbertRectangleScan(
-      spark, s"$tmp/control", "pk", xLo, xHi, "sk", yLo, yHi)
+    val (_, readCtl, totalCtl) = ClusteredLayout.hilbertScan(
+      spark, s"$tmp/control", Seq(("pk", xLo, xHi), ("sk", yLo, yHi)))
     assert(readCtl > totalCtl * 9 / 10,
       s"control layout should hit ~all files, hit $readCtl of $totalCtl")
 
     // single-dim probe on the SAME 2-D layout (round-11 ask #7): the
     // manifest stores per-dim bounds, so a 1-D predicate prunes too —
     // a 5%-of-domain pk band must skip a clear majority of files
-    val (res1d, read1d, total1d) = api.Graft.hilbertScan(
+    val (res1d, read1d, total1d) = ClusteredLayout.hilbertScan(
       spark, s"$tmp/layout", Seq(("pk", 400L, 500L)))
     val exp1d = df.filter(col("pk").between(400L, 500L))
     assert(res1d.count() == exp1d.count())
@@ -78,11 +80,11 @@ class HilbertGraftApiSpec extends AnyFunSuite {
         rng.nextInt(1000).toLong)
     }
     val df = rows.toDF("id", "a", "b", "c")
-    api.Graft.writeClusteredLayout(df, Seq("a", "b", "c"),
+    ClusteredLayout.writeClusteredLayout(df, Seq("a", "b", "c"),
       s"$tmp/layout", files = 64)
 
     // full 3-D box: 20% of each dim -> 0.8% of the volume
-    val (res3, read3, total3) = api.Graft.hilbertScan(spark,
+    val (res3, read3, total3) = ClusteredLayout.hilbertScan(spark,
       s"$tmp/layout",
       Seq(("a", 100L, 299L), ("b", 400L, 599L), ("c", 700L, 899L)))
     val exp3 = df.filter(col("a").between(100L, 299L) &&
@@ -95,7 +97,7 @@ class HilbertGraftApiSpec extends AnyFunSuite {
       s"3-D box should skip >= 2/3 of files, read $read3 of $total3")
 
     // 2-of-3-dim probe (the subset path): exact and still pruning
-    val (res2, read2, _) = api.Graft.hilbertScan(spark, s"$tmp/layout",
+    val (res2, read2, _) = ClusteredLayout.hilbertScan(spark, s"$tmp/layout",
       Seq(("a", 100L, 299L), ("c", 700L, 899L)))
     val exp2 = df.filter(col("a").between(100L, 299L) &&
       col("c").between(700L, 899L))
@@ -113,7 +115,8 @@ class HilbertGraftApiSpec extends AnyFunSuite {
     }.toDF("id", "pk", "sk")
     // write the CURRENT layout, then rewrite the manifest in the
     // round-11 fixed-name format a persisted pre-round-12 layout carries
-    api.Graft.writeHilbertLayout(df, "pk", "sk", s"$tmp/layout", files = 32)
+    ClusteredLayout.writeClusteredLayout(df, Seq("pk", "sk"), s"$tmp/layout",
+      files = 32)
     val modern = spark.read.parquet(s"$tmp/layout/zonemap")
     modern.select(col("file"), col("pk_min").as("xmin"),
         col("pk_max").as("xmax"), col("sk_min").as("ymin"),
@@ -126,8 +129,8 @@ class HilbertGraftApiSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$tmp/layout/zonemap_legacy").toFile,
       legacyDir.toFile)
 
-    val (result, read, total) = api.Graft.hilbertRectangleScan(
-      spark, s"$tmp/layout", "pk", 400L, 600L, "sk", 320L, 480L)
+    val (result, read, total) = ClusteredLayout.hilbertScan(
+      spark, s"$tmp/layout", Seq(("pk", 400L, 600L), ("sk", 320L, 480L)))
     val expected = df.filter(col("pk").between(400L, 600L) &&
       col("sk").between(320L, 480L))
     assert(result.count() == expected.count())
@@ -135,7 +138,7 @@ class HilbertGraftApiSpec extends AnyFunSuite {
     // a legacy manifest records no dim names: a 1-pred probe would be
     // positionally ambiguous and must be refused, not guessed
     intercept[IllegalArgumentException] {
-      api.Graft.hilbertScan(spark, s"$tmp/layout", Seq(("sk", 1L, 2L)))
+      ClusteredLayout.hilbertScan(spark, s"$tmp/layout", Seq(("sk", 1L, 2L)))
     }
   }
 }
